@@ -1,7 +1,9 @@
 """Plan builder: QuerySpec -> DataFrame scan pipeline.
 
 The Spark-native equivalent of kbrowse's `search` prologue + poll loop
-(`src/kbrowse/search.clj:128-201`), re-expressed declaratively:
+(`src/kbrowse/search.clj:128-201`), re-expressed declaratively.  This
+is the only module that knows the record pipeline; follow mode
+(streaming/follow.py) runs the same plan as a stream:
 
 * partition resolution -> source pruning (``assign`` option / fixture
   partition filter) — never a post-hoc filter over data we could have
@@ -12,23 +14,43 @@ The Spark-native equivalent of kbrowse's `search` prologue + poll loop
 * progress tap (O16) -> a side branch unioned in (Q5: progress rows are
   emitted for every n-th offset regardless of match)
 
-The output DataFrame is the *discriminated-union row stream*
-(type: offset|result) ordered by (topic, partition, offset) — the
-deterministic order SURVEY §7 mandates for stable output hashing.
+``spec.follow`` picks the reader: ``spark.read`` or ``spark.readStream``.
+As in the reference, whose ``continue?`` short-circuits the stop test
+on follow (search.clj:103-122), follow mode keeps the starting bounds
+(relative offset, start timestamp) and drops the stop bounds (offset
+snapshot, stop timestamp).
+
+The output is the *discriminated-union row stream* (type:
+offset|result).  A batch scan is ordered by ``EMIT_ORDER``, the
+deterministic order SURVEY §7 mandates for stable output hashing; a
+follow stream is unordered and follow mode sorts each micro-batch.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kbrowse_spark.functions.decoders import msgpack_str_udf, string_decode
 from kbrowse_spark.plans.query_spec import QuerySpec, QuerySpecError
-from kbrowse_spark.sources.fixture import envelope_from_parquet
-from kbrowse_spark.sources.kafka import (
-    kafka_batch_options,
-    resolve_partitions,
+from kbrowse_spark.sources.fixture import (
+    envelope_from_parquet,
+    envelope_stream_from_parquet,
 )
+from kbrowse_spark.sources.kafka import (
+    clamp_offset,
+    kafka_batch_options,
+    kafka_stream_options,
+    resolve_partitions,
+    starting_offsets_json,
+)
+
+# Emission order (SURVEY §7 hard-point 1): event-time first — preserves
+# per-partition offset order on monotonic producers AND reproduces the
+# reference's arrival-order interleave on its own integration fixtures
+# — then (topic, partition, offset) as total tie-break; 'offset'
+# (progress) rows sort before 'result' rows for the same record.
+EMIT_ORDER = ("timestamp", "topic", "partition", "offset", "type")
 
 
 def anchored(regex: str) -> str:
@@ -72,66 +94,45 @@ def _decode(
 
 
 def load_envelope(spark: SparkSession, spec: QuerySpec) -> DataFrame:
-    """Source DataFrame in Kafka-envelope shape, with partition pruning
-    already applied at the source."""
+    """Source DataFrame in Kafka-envelope shape, a stream when
+    ``spec.follow``, with partition pruning and the starting offset
+    window already applied at the source."""
     if spec.source_parquet:
-        df = envelope_from_parquet(spark, spec.source_parquet)
-        if spec.topics:
-            df = df.filter(F.col("topic").isin(spec.topics))
-        assignment = _fixture_assignment(df, spec)
-        if assignment is not None:
-            pairs = [(t, p) for t, ps in assignment.items() for p in ps]
-            cond = F.lit(False)
-            for t, p in pairs:
-                cond = cond | ((F.col("topic") == t) & (F.col("partition") == p))
-            df = df.filter(cond)
-        return df
+        if spec.follow:
+            df, snapshot = envelope_stream_from_parquet(spark, spec.source_parquet)
+        else:
+            df = snapshot = envelope_from_parquet(spark, spec.source_parquet)
+        return df.filter(_fixture_condition(snapshot, spec))
     if spec.bootstrap_servers:
-        counts = _broker_partition_counts(spec)
-        assignment = resolve_partitions(
-            spec.topics,
-            counts,
-            spec.partitions,
-            spec.key_regex if spec.default_partition else None,
-        )
-        opts = kafka_batch_options(
-            spec.bootstrap_servers,
-            assignment,
-            starting_offsets="earliest"
+        assignment = _assign(spec, _broker_partition_counts(spec))
+        starting = (
+            "earliest"
             if spec.relative_offset is None
-            else _broker_starting_offsets(spec, assignment),
-            ending_offsets="latest",
-            min_partitions=spec.min_partitions,
+            else _broker_starting_offsets(spec, assignment)
         )
-        reader = spark.read.format("kafka")
-        for k, v in opts.items():
-            reader = reader.option(k, v)
-        return reader.load()
+        if spec.follow:
+            reader = spark.readStream
+            opts = kafka_stream_options(
+                spec.bootstrap_servers,
+                assignment,
+                starting_offsets=starting,
+                max_offsets_per_trigger=spec.max_offsets_per_trigger,
+                min_partitions=spec.min_partitions,
+            )
+        else:
+            reader = spark.read
+            opts = kafka_batch_options(
+                spec.bootstrap_servers,
+                assignment,
+                starting_offsets=starting,
+                min_partitions=spec.min_partitions,
+            )
+        return reader.format("kafka").options(**opts).load()
     raise QuerySpecError("no source: set source_parquet or bootstrap_servers")
 
 
-def _fixture_assignment(df: DataFrame, spec: QuerySpec) -> dict | None:
-    """Partition resolution for the fixture path.  Returns None when no
-    pruning applies (all partitions)."""
-    if not spec.default_partition and not spec.partitions:
-        return None
-    # Partition counts: prefer the explicit hint — data inference
-    # (max+1) under-counts when high partitions are empty, which would
-    # silently break murmur2 default-partition pruning.  The Kafka path
-    # always has the true count from broker metadata
-    # (kbrowse kafka.clj:51-57); the fixture path needs the hint.
-    if spec.num_partitions is not None:
-        topics = spec.topics or [
-            r["topic"] for r in df.select("topic").distinct().collect()
-        ]
-        counts = {t: spec.num_partitions for t in topics}
-    else:
-        counts = {
-            r["topic"]: r["n"]
-            for r in df.groupBy("topic")
-            .agg((F.max("partition") + 1).alias("n"))
-            .collect()
-        }
+def _assign(spec: QuerySpec, counts: dict[str, int]) -> dict[str, list[int]]:
+    """topic -> partitions to read, from per-topic partition counts."""
     topics = spec.topics or sorted(counts)
     return resolve_partitions(
         [t for t in topics if t in counts],
@@ -139,6 +140,64 @@ def _fixture_assignment(df: DataFrame, spec: QuerySpec) -> dict | None:
         spec.partitions,
         spec.key_regex if spec.default_partition else None,
     )
+
+
+def _any(conds) -> Column:
+    out = F.lit(False)
+    for c in conds:
+        out = out | c
+    return out
+
+
+def _fixture_condition(snapshot: DataFrame, spec: QuerySpec) -> Column:
+    """The fixture path's stand-in for the Kafka reader's ``assign`` and
+    ``startingOffsets`` options: a filter on topics, partitions and the
+    starting offset, resolved against a plan-time snapshot of the
+    source."""
+    cond = F.col("topic").isin(spec.topics) if spec.topics else F.lit(True)
+    if spec.default_partition or spec.partitions:
+        # Partition counts: prefer the explicit hint — data inference
+        # (max+1) under-counts when high partitions are empty, which
+        # would silently break murmur2 default-partition pruning.  The
+        # Kafka path always has the true count from broker metadata
+        # (kbrowse kafka.clj:51-57); the fixture path needs the hint.
+        snap = snapshot.filter(cond)
+        if spec.num_partitions is not None:
+            topics = spec.topics or [
+                r["topic"] for r in snap.select("topic").distinct().collect()
+            ]
+            counts = {t: spec.num_partitions for t in topics}
+        else:
+            counts = {
+                r["topic"]: r["n"]
+                for r in snap.groupBy("topic")
+                .agg((F.max("partition") + 1).alias("n"))
+                .collect()
+            }
+        cond = cond & _any(
+            (F.col("topic") == t) & (F.col("partition") == p)
+            for t, ps in _assign(spec, counts).items()
+            for p in ps
+        )
+    if spec.relative_offset is not None:
+        # Relative offset per partition of the snapshot's [earliest,
+        # latest), with Q9 clamping.  Only the start is a filter: a
+        # batch scan reads the snapshot itself, so offset < latest holds
+        # by construction (Q4), and follow mode drops the stop bound.
+        n = spec.relative_offset
+        snap = (
+            snapshot.filter(cond)
+            .groupBy("topic", "partition")
+            .agg(F.min("offset").alias("e"), (F.max("offset") + 1).alias("l"))
+            .collect()
+        )
+        cond = cond & _any(
+            (F.col("topic") == r.topic)
+            & (F.col("partition") == r.partition)
+            & (F.col("offset") >= clamp_offset((r.e if n >= 0 else r.l) + n, r.e, r.l))
+            for r in snap
+        )
+    return cond
 
 
 def _broker_partition_counts(spec: QuerySpec) -> dict[str, int]:
@@ -159,8 +218,6 @@ def _broker_partition_counts(spec: QuerySpec) -> dict[str, int]:
 def _broker_starting_offsets(spec: QuerySpec, assignment: dict) -> str:
     from kafka import KafkaConsumer, TopicPartition  # type: ignore
 
-    from kbrowse_spark.sources.kafka import starting_offsets_json
-
     consumer = KafkaConsumer(bootstrap_servers=spec.bootstrap_servers)
     try:
         tps = [TopicPartition(t, p) for t, ps in assignment.items() for p in ps]
@@ -178,75 +235,23 @@ def _broker_starting_offsets(spec: QuerySpec, assignment: dict) -> str:
         consumer.close()
 
 
-def _fixture_window_condition(
-    snapshot_df: DataFrame, spec: QuerySpec, bounded: bool = True
-):
-    """Scan-window filter condition from a plan-time snapshot of
-    per-partition [earliest, latest): relative-offset with Q9 clamping,
-    bounded by the snapshot (Q4).  Shared by the batch planner and
-    follow mode (which passes bounded=False: the reference's follow
-    ignores the stop bound but still honors the starting seek —
-    search.clj:179,166).  Returns None when no window applies."""
-    if spec.relative_offset is None:
-        return None
-    from kbrowse_spark.sources.kafka import clamp_offset
-
-    snap = (
-        snapshot_df.groupBy("topic", "partition")
-        .agg(F.min("offset").alias("earliest"), (F.max("offset") + 1).alias("latest"))
-        .collect()
-    )
-    cond = F.lit(False)
-    for r in snap:
-        e, l = r["earliest"], r["latest"]
-        n = spec.relative_offset
-        start = clamp_offset(e + n if n >= 0 else l + n, e, l)
-        part_cond = (
-            (F.col("topic") == r["topic"])
-            & (F.col("partition") == r["partition"])
-            & (F.col("offset") >= start)
-        )
-        if bounded:
-            part_cond = part_cond & (F.col("offset") < l)
-        cond = cond | part_cond
-    return cond
-
-
-def _apply_offset_window(df: DataFrame, spec: QuerySpec) -> DataFrame:
-    """Fixture-path scan window (see _fixture_window_condition); on the
-    Kafka path this logic compiles into source options instead."""
-    cond = _fixture_window_condition(df, spec)
-    return df if cond is None else df.filter(cond)
-
-
-def build_scan(
-    spark: SparkSession, spec: QuerySpec, *, deterministic_order: bool = True
-) -> DataFrame:
-    """Full pipeline: envelope -> window -> decode -> regex filter ->
-    discriminated union (offset|result rows).
+def build_scan(spark: SparkSession, spec: QuerySpec) -> DataFrame:
+    """Full pipeline: envelope -> timestamp bounds -> decode -> regex
+    filter -> discriminated union (offset|result rows).
 
     Output columns: type, topic, partition, offset, timestamp,
-    key_str, value_str.
-
-    ``deterministic_order=True`` (default — the oracle-hash / CLI
-    path) totally orders by (topic, partition, offset, type): the
-    reference's per-partition arrival (offset) order, made total.
-    ``False`` (service emission at scale) sorts within partitions
-    only — no cluster-wide exchange for a sort the wire protocol
-    doesn't require.
+    key_str, value_str.  A batch scan is totally ordered by
+    ``EMIT_ORDER``; with ``spec.follow`` it is an unordered stream.
     """
     env = load_envelope(spark, spec)
-    env = _apply_offset_window(env, spec)
     if spec.start_timestamp:
         # The reference validates --start-timestamp but never applies it
         # (SURVEY O9: consumed at cli.clj:65-66, unused in search.clj) —
-        # implemented for real here; on the Kafka path the same bound
-        # also compiles to startingOffsetsByTimestamp, with this filter
-        # as the exactness residual (offset-for-time is batch-granular).
+        # implemented for real here, as a filter on both source paths.
         env = env.filter(
             F.col("timestamp") >= F.lit(spec.start_timestamp).cast("timestamp")
         )
-    if spec.stop_timestamp:
+    if spec.stop_timestamp and not spec.follow:
         env = env.filter(
             F.col("timestamp") <= F.lit(spec.stop_timestamp).cast("timestamp")
         )
@@ -274,26 +279,13 @@ def build_scan(
         matched = matched.filter(F.col("key_str").rlike(anchored(spec.key_regex)))
     if spec.value_regex is not None:
         matched = matched.filter(F.col("value_str").rlike(anchored(spec.value_regex)))
-    results = matched.select(F.lit("result").alias("type"), *base_cols)
+    out = matched.select(F.lit("result").alias("type"), *base_cols)
 
     if spec.print_offset:
         # Q5: progress rows sample the *unfiltered* stream.
         progress = env.filter((F.col("offset") % spec.print_offset) == 0).select(
             F.lit("offset").alias("type"), *base_cols
         )
-        out = progress.unionByName(results)
-    else:
-        out = results
+        out = progress.unionByName(out)
 
-    # Emission order (SURVEY §7 hard-point 1).  Deterministic mode:
-    # event-time first — preserves per-partition offset order on
-    # monotonic producers AND reproduces the reference's arrival-order
-    # interleave on its own integration fixtures — then (topic,
-    # partition, offset) as total tie-break; 'offset' (progress) rows
-    # sort before 'result' rows for the same record.  Scale mode
-    # sorts within partitions only: per-Kafka-partition offset order
-    # (exactly the reference's guarantee) without a cluster-wide
-    # exchange.
-    if deterministic_order:
-        return out.orderBy("timestamp", "topic", "partition", "offset", "type")
-    return out.sortWithinPartitions("topic", "partition", "offset", "type")
+    return out if spec.follow else out.orderBy(*EMIT_ORDER)

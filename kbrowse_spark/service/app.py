@@ -19,7 +19,6 @@ an explicit flag here).
 
 from __future__ import annotations
 
-import json
 import threading
 import time
 
@@ -180,9 +179,9 @@ def create_app(spark=None, config: EngineConfig | None = None):
             # piped-input-stream).  If the client stops reading, the
             # writer times out and the watchdog stops the query — no
             # immortal thread.
-            import json as _json
             import queue
 
+            from kbrowse_spark.sinks.pioneer import close_array
             from kbrowse_spark.streaming.follow import run_follow
 
             chunks: queue.Queue = queue.Queue(maxsize=1000)
@@ -207,10 +206,9 @@ def create_app(spark=None, config: EngineConfig | None = None):
                 try:
                     run_follow(get_session(), spec, _QueueWriter(), bounded=False)
                 except Exception as e:  # surface errors on the wire
-                    # Keep the streamed array parseable: the error is
-                    # one more row, then the closing bracket (run_follow
-                    # never wrote ']' on the failure path).
-                    _put_final(", " + _json.dumps({"error": str(e)}) + "]")
+                    # Keep the streamed array parseable (run_follow
+                    # never closed it on the failure path).
+                    _put_final(close_array(e))
                 finally:
                     _put_final(None)
 
@@ -226,7 +224,7 @@ def create_app(spark=None, config: EngineConfig | None = None):
             return Response(generate_follow(), mimetype="application/json")
 
         from kbrowse_spark.plans.planner import build_scan
-        from kbrowse_spark.sinks.pioneer import emit_json_array
+        from kbrowse_spark.sinks.pioneer import close_array, emit_json_array
 
         try:
             df = build_scan(get_session(), spec)
@@ -238,9 +236,6 @@ def create_app(spark=None, config: EngineConfig | None = None):
             # reference applies stop-running-date to every search,
             # search.clj:117-121): cancel this query's job group after
             # the deadline so a huge /search can't pin the cluster.
-            import json as _json
-            import time
-
             sc = df.sparkSession.sparkContext
             group = f"search-{time.monotonic_ns()}"
             sc.setJobGroup(group, "bounded /search", True)
@@ -249,18 +244,26 @@ def create_app(spark=None, config: EngineConfig | None = None):
             )
             timer.daemon = True
             timer.start()
-            buf: list[str] = []
+            # The response is kept for the cache only while it fits
+            # the cache's size cap: a bigger one is never buffered.
+            buf: list[str] | None = []
+            size = 0
             try:
                 for chunk in emit_json_array(df, pretty=False):
-                    buf.append(chunk)
+                    size += len(chunk)
+                    if size > cache.size_limit:
+                        buf = None
+                    elif buf is not None:
+                        buf.append(chunk)
                     yield chunk  # chunked transfer: client reads while we scan
             except Exception as e:  # cancelled (or failed) mid-stream:
                 # close the array on the wire, never cache the partial.
-                yield ", " + _json.dumps({"error": str(e)}) + "]"
+                yield close_array(e)
                 return
             finally:
                 timer.cancel()
-            cache.put(cache_key, "".join(buf))
+            if buf is not None:
+                cache.put(cache_key, "".join(buf))
 
         return Response(generate(), mimetype="application/json")
 

@@ -3,7 +3,9 @@ format (SURVEY O17), preserved byte-for-byte so any kbrowse client can
 consume this engine's output.
 
 Protocol (`src/kbrowse/search.clj:25-32,159-160,201`):
-``[`` then ``{"type": "pioneer"}`` then ``, <row>`` per row then ``]``.
+``[`` then ``{"type": "pioneer"}`` then ``, <row>`` per row then ``]``;
+a failed scan ends ``, {"error": msg}]``.  /search, the CLI and follow
+mode all take that framing from this module.
 Result rows carry epoch-millis timestamps and best-effort JSON-parsed
 key/value (O14/O15); progress rows carry a rendered date string (Q5).
 
@@ -61,17 +63,32 @@ def render_row(row) -> dict:
     }
 
 
+def _dump(obj, pretty: bool) -> str:
+    return json.dumps(obj, indent=2 if pretty else None, ensure_ascii=False)
+
+
+def open_array(pretty: bool = True) -> str:
+    """Everything before the first row: '[' and the pioneer element."""
+    return "[" + _dump(PIONEER, pretty)
+
+
+def element(obj: dict, pretty: bool = True) -> str:
+    """One array element after the pioneer: ', ' + JSON."""
+    return ", " + _dump(obj, pretty)
+
+
+def close_array(error: BaseException | None = None) -> str:
+    """']', after an error element when the scan failed mid-stream, so
+    the client still holds a parseable array."""
+    return "]" if error is None else element({"error": str(error)}, False) + "]"
+
+
 def emit_json_array(df: DataFrame, pretty: bool = True) -> Iterator[str]:
-    """Yield protocol chunks: '[', pioneer, ', '+row ..., ']'."""
-
-    def dump(obj) -> str:
-        return json.dumps(obj, indent=2 if pretty else None, ensure_ascii=False)
-
-    yield "["
-    yield dump(PIONEER)
+    """Yield protocol chunks: '[' + pioneer, ', '+row ..., ']'."""
+    yield open_array(pretty)
     for row in df.toLocalIterator():
-        yield ", " + dump(render_row(row))
-    yield "]"
+        yield element(render_row(row), pretty)
+    yield close_array()
 
 
 def collect_protocol(df: DataFrame, pretty: bool = False) -> str:

@@ -122,10 +122,8 @@ def offsets_by_timestamp_json(
 ) -> str:
     """`startingOffsetsByTimestamp` / `endingOffsetsByTimestamp` JSON:
     every assigned partition bound at one epoch-millis instant.  The
-    reference's start-timestamp option (validated but unused there —
-    SURVEY O9) and stop-timestamp both compile to this; a residual
-    `timestamp <= bound` filter preserves exactness since the Kafka
-    offset-for-time lookup is batch-granular."""
+    planner does not pass these options; it applies the start- and
+    stop-timestamp bounds as filters on both source paths."""
     return json.dumps(
         {t: {str(p): timestamp_ms for p in ps} for t, ps in sorted(assignment.items())}
     )

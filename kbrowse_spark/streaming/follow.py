@@ -1,12 +1,10 @@
-"""Follow mode (kbrowse O2): the unbounded variant of the scan.
+"""Follow mode (kbrowse O2): the scan of plans/planner.build_scan with
+``spec.follow`` set, run as a Structured Streaming query.
 
-Same logical pipeline as plans/planner.build_scan, compiled to
-Structured Streaming: ``readStream`` source -> decode/filter ->
+This module holds only what is specific to streaming: the trigger, a
 ``foreachBatch`` that renders each micro-batch through the pioneer
-protocol in (partition, offset) order.  Bounded runs use the
-``availableNow`` trigger, which reproduces the reference's
-offsets-snapshot stop bound (Q4) — so batch and follow mode share one
-implementation of the record pipeline.
+protocol in ``EMIT_ORDER``, and the kill switch.  Bounded runs use the
+``availableNow`` trigger: scan what exists at start, then stop.
 
 The wall-clock kill switch (O10, `search.clj:118-122`) is a driver-side
 watchdog: ``query.stop()`` after ``stop_after_seconds``.
@@ -18,117 +16,10 @@ import threading
 from typing import IO
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from kbrowse_spark.plans.planner import anchored, _decode
-from kbrowse_spark.plans.query_spec import QuerySpec, QuerySpecError
-from kbrowse_spark.sinks.pioneer import render_row
-import json
-
-
-def _stream_envelope(spark: SparkSession, spec: QuerySpec) -> DataFrame:
-    if spec.source_parquet:
-        import os
-
-        from kbrowse_spark.operators.streaming_queries import _stage_stream_dir
-        from kbrowse_spark.plans.planner import (
-            _fixture_assignment,
-            _fixture_window_condition,
-        )
-        from kbrowse_spark.sources.fixture import ENVELOPE_SCHEMA
-
-        path = spec.source_parquet
-        if "*" in path or os.path.isdir(path):
-            # Directory or glob: stream it directly.  NOTE a directory
-            # of Spark-written tables needs a glob (dir/*.parquet) —
-            # the file source does not recurse into nested dirs.
-            src_dir = path
-        else:
-            src_dir = _stage_stream_dir(path)
-        df = spark.readStream.schema(ENVELOPE_SCHEMA).parquet(src_dir)
-        if spec.topics:
-            df = df.filter(F.col("topic").isin(spec.topics))
-        # Partition pruning + scan-window semantics apply to follow mode
-        # exactly as to batch (reference search.clj:139-150,166-167):
-        # resolve both against a static snapshot of the same source.
-        static = spark.read.schema(ENVELOPE_SCHEMA).parquet(src_dir)
-        if spec.topics:
-            static = static.filter(F.col("topic").isin(spec.topics))
-        assignment = _fixture_assignment(static, spec)
-        if assignment is not None:
-            cond = F.lit(False)
-            for t, ps in assignment.items():
-                for p in ps:
-                    cond = cond | (
-                        (F.col("topic") == t) & (F.col("partition") == p)
-                    )
-            df = df.filter(cond)
-        # Follow ignores stop bounds (offset snapshot / stop-timestamp —
-        # reference continue? short-circuits on follow, search.clj:107)
-        # but honors the starting seek (relative-offset).
-        window_cond = _fixture_window_condition(static, spec, bounded=False)
-        if window_cond is not None:
-            df = df.filter(window_cond)
-        return df
-    if spec.bootstrap_servers:
-        from kbrowse_spark.plans.planner import (
-            _broker_partition_counts,
-            _broker_starting_offsets,
-        )
-        from kbrowse_spark.sources.kafka import (
-            kafka_stream_options,
-            resolve_partitions,
-        )
-
-        counts = _broker_partition_counts(spec)
-        assignment = resolve_partitions(
-            spec.topics,
-            counts,
-            spec.partitions,
-            spec.key_regex if spec.default_partition else None,
-        )
-        starting = (
-            "earliest"
-            if spec.relative_offset is None
-            else _broker_starting_offsets(spec, assignment)
-        )
-        opts = kafka_stream_options(
-            spec.bootstrap_servers,
-            assignment,
-            starting_offsets=starting,
-            max_offsets_per_trigger=spec.max_offsets_per_trigger,
-            min_partitions=spec.min_partitions,
-        )
-        reader = spark.readStream.format("kafka")
-        for k, v in opts.items():
-            reader = reader.option(k, v)
-        return reader.load()
-    raise QuerySpecError("no source: set source_parquet or bootstrap_servers")
-
-
-def build_follow_stream(spark: SparkSession, spec: QuerySpec) -> DataFrame:
-    env = _stream_envelope(spark, spec)
-    env = _decode(
-        env, "key", spec.key_deserializer, spec.avro_key_schema,
-        spec.schema_registry_url,
-    )
-    env = _decode(
-        env, "value", spec.value_deserializer, spec.avro_value_schema,
-        spec.schema_registry_url,
-    )
-    matched = env
-    if spec.key_regex is not None:
-        matched = matched.filter(F.col("key_str").rlike(anchored(spec.key_regex)))
-    if spec.value_regex is not None:
-        matched = matched.filter(F.col("value_str").rlike(anchored(spec.value_regex)))
-    cols = ["topic", "partition", "offset", "timestamp", "key_str", "value_str"]
-    results = matched.select(F.lit("result").alias("type"), *cols)
-    if spec.print_offset:
-        progress = env.filter((F.col("offset") % spec.print_offset) == 0).select(
-            F.lit("offset").alias("type"), *cols
-        )
-        results = progress.unionByName(results)
-    return results
+from kbrowse_spark.plans.planner import EMIT_ORDER, build_scan
+from kbrowse_spark.plans.query_spec import QuerySpec
+from kbrowse_spark.sinks.pioneer import close_array, element, open_array, render_row
 
 
 def run_follow(
@@ -138,36 +29,27 @@ def run_follow(
     bounded: bool = True,
     processing_interval: str = "1 second",
 ) -> None:
-    """Run follow mode, writing the pioneer protocol incrementally.
+    """Run follow mode (``spec.follow`` set), writing the pioneer
+    protocol incrementally.
 
-    ``bounded=True`` uses availableNow (scan-to-snapshot then stop —
-    batch parity); ``bounded=False`` polls until the kill switch fires.
+    ``bounded=True`` uses availableNow (scan-to-snapshot then stop);
+    ``bounded=False`` polls until the kill switch fires.
     """
-    stream = build_follow_stream(spark, spec)
-    lock = threading.Lock()
+    stream = build_scan(spark, spec)
 
-    out.write("[")
-    out.write(json.dumps({"type": "pioneer"}))
+    out.write(open_array(pretty=False))
     out.flush()
 
     def emit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # Deterministic intra-batch order (SURVEY §7 hard-point 1).
-        rows = (
-            batch_df.orderBy("timestamp", "topic", "partition", "offset", "type")
-            .toLocalIterator()
-        )
-        with lock:
-            for row in rows:
-                out.write(", " + json.dumps(render_row(row), ensure_ascii=False))
-            out.flush()
+        for row in batch_df.orderBy(*EMIT_ORDER).toLocalIterator():
+            out.write(element(render_row(row), pretty=False))
+        out.flush()
 
     writer = stream.writeStream.foreachBatch(emit_batch).outputMode("append")
     if bounded:
         query = writer.trigger(availableNow=True).start()
     else:
         query = writer.trigger(processingTime=processing_interval).start()
-
-    if not bounded:
         # O10 kill switch: protect the cluster from immortal follows
         # (reference default 86400 s when the query didn't set one).
         deadline = (
@@ -178,5 +60,5 @@ def run_follow(
         timer.start()
 
     query.awaitTermination()
-    out.write("]")
+    out.write(close_array())
     out.flush()

@@ -68,6 +68,28 @@ def test_search_cached_roundtrip(client):
     assert hit.get_data(as_text=True) == first
 
 
+def test_search_over_cache_cap_streams_uncached(spark, client, monkeypatch):
+    """A response larger than the cache's size cap still streams whole,
+    but is neither buffered to the end nor offered to the cache."""
+    from kbrowse_spark.config import EngineConfig
+
+    puts = []
+    put = ResponseCache.put
+    monkeypatch.setattr(
+        ResponseCache, "put", lambda self, k, text: puts.append(k) or put(self, k, text)
+    )
+    app = create_app(spark=spark, config=EngineConfig(cache_item_size_limit=100))
+    c = app.test_client()
+    qs = f"source-parquet={client.fixture_path}&topics=topic-a&key-regex=k.*"
+    text = c.get(f"/search?{qs}").get_data(as_text=True)
+    assert len(text) > 100
+    rows = json.loads(text)
+    assert rows[0] == {"type": "pioneer"}
+    assert [x["value"] for x in rows[1:]] == ["v0", "v1", "v2"]
+    assert puts == []
+    assert c.get(f"/cached?{qs}").status_code == 404
+
+
 def test_cache_semantics():
     c = ResponseCache(max_items=2, ttl_seconds=1000, item_size_limit=10)
     c.put("a", "x" * 5)

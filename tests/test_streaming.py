@@ -3,12 +3,14 @@ follow-mode protocol, topic-metadata cache."""
 
 from __future__ import annotations
 
+import dataclasses
 import datetime
 import io
 import json
 import os
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -84,6 +86,69 @@ def test_follow_mode_protocol(spark, tmp_path):
     assert rows[0] == {"type": "pioneer"}
     assert len(rows) == 4
     assert [r["value"] for r in rows[1:]] == ["v0", "v1", "v2"]
+
+
+@pytest.fixture(scope="module")
+def topic_a_path(spark, tmp_path_factory):
+    from kbrowse_spark.sources.fixture import golden_topic_a
+
+    path = str(tmp_path_factory.mktemp("follow") / "topic_a.parquet")
+    golden_topic_a(spark).write.parquet(path)
+    return path
+
+
+# (options, result values on the golden topic-a fixture; None = events)
+PARITY_CASES = {
+    "key_regex": ({"key_regex": "k0"}, ["v0", "v1"]),
+    "default_partition": (
+        {"key_regex": "k2", "default_partition": True, "num_partitions": 10},
+        ["v2"],
+    ),
+    "relative_offset": ({"relative_offset": -1}, ["v1", "v2"]),
+    "start_timestamp": ({"start_timestamp": "2024-01-01T00:00:01"}, ["v1", "v2"]),
+    "print_offset": ({"key_regex": "k2", "print_offset": 1}, ["v0", "v1", "v2", "v2"]),
+    "events_shaped": ({"key_regex": "12"}, None),
+}
+
+
+@pytest.mark.parametrize("case", sorted(PARITY_CASES))
+def test_follow_matches_search(spark, sf_dir, topic_a_path, case):
+    """Bounded follow emits exactly the rows of the batch /search scan:
+    both run the one pipeline in plans/planner.py."""
+    from kbrowse_spark.plans.planner import build_scan
+    from kbrowse_spark.plans.query_spec import QuerySpec
+    from kbrowse_spark.sinks.pioneer import collect_protocol
+    from kbrowse_spark.streaming.follow import run_follow
+
+    options, values = PARITY_CASES[case]
+    if values is None:
+        source = {"source_parquet": os.path.join(sf_dir, "events.parquet")}
+    else:
+        source = {"source_parquet": topic_a_path, "topics": ["topic-a"]}
+    spec = QuerySpec(**source, **options).validate()
+    batch = json.loads(collect_protocol(build_scan(spark, spec)))
+    buf = io.StringIO()
+    run_follow(spark, dataclasses.replace(spec, follow=True), buf, bounded=True)
+    assert json.loads(buf.getvalue()) == batch
+    assert batch[0] == {"type": "pioneer"} and len(batch) > 1
+    if values is not None:
+        assert [r["value"] for r in batch[1:]] == values
+
+
+def test_follow_empty_directory(spark, tmp_path):
+    """Following an envelope directory with no files yet emits the
+    pioneer and closes on the kill switch."""
+    from kbrowse_spark.plans.query_spec import QuerySpec
+    from kbrowse_spark.streaming.follow import run_follow
+
+    src = tmp_path / "empty"
+    src.mkdir()
+    spec = QuerySpec(
+        source_parquet=str(src), follow=True, stop_after_seconds=3
+    ).validate()
+    buf = io.StringIO()
+    run_follow(spark, spec, buf, bounded=False, processing_interval="500 milliseconds")
+    assert json.loads(buf.getvalue()) == [{"type": "pioneer"}]
 
 
 def test_topics_cache_refresh_and_resilience():

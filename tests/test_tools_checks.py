@@ -149,7 +149,7 @@ def test_hof_hotpath_checker_flags_the_r12_pq_shape():
             "tools",
         ),
     )
-    from audit_hof_hotpath import audit_source, hof_depth
+    from audit_hof_hotpath import audit_source, flagged, hof_depth
 
     PQ_SHAPE = textwrap.dedent(
         '''
@@ -179,11 +179,30 @@ def test_hof_hotpath_checker_flags_the_r12_pq_shape():
     assert audit_source(DOT_SHAPE, "m") == []
     assert hof_depth("transform(a, x -> x + 1)") == 1
 
-    tool = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "tools",
-        "audit_hof_hotpath.py",
+    # The allowlist is keyed on function + expression text, not on the
+    # line: a line inserted above the allow-listed site still passes,
+    # and a different 3-deep expression in the same function flags.
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    mod = "kbrowse_spark/operators/analytics.py"
+    with open(os.path.join(root, mod)) as f:
+        src = f.read()
+    shifted = src.replace(
+        "def seq_pattern_triples", "# an unrelated line\ndef seq_pattern_triples", 1
     )
+    assert audit_source(shifted, mod) and flagged(audit_source(shifted, mod)) == []
+    body = shifted.index(
+        '    e = load(spark, sf_dir, "events")',
+        shifted.index("def seq_pattern_triples"),
+    )
+    other = (
+        shifted[:body]
+        + '    F.expr("transform(a, x -> transform(x, y -> transform(y, z -> z)))")\n'
+        + shifted[body:]
+    )
+    found = flagged(audit_source(other, mod))
+    assert len(found) == 1 and " :: seq_pattern_triples :: " in found[0][3]
+
+    tool = os.path.join(root, "tools", "audit_hof_hotpath.py")
     res = subprocess.run(
         [sys.executable, tool], capture_output=True, text=True
     )
