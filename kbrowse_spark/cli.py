@@ -116,7 +116,12 @@ def main(argv: list[str] | None = None) -> int:
 
         # True follow: unbounded polling until the kill switch fires
         # (reference semantics — follow ignores the snapshot bound).
-        run_follow(spark, spec, sys.stdout, bounded=False)
+        # run_follow closes the array on stdout whether or not it fails.
+        try:
+            run_follow(spark, spec, sys.stdout, bounded=False)
+        except Exception as e:
+            print(_json.dumps({"error": str(e)}), file=sys.stderr)
+            return 1
         return 0
 
     from kbrowse_spark.plans.planner import build_scan

@@ -9,6 +9,9 @@ is the only module that knows the record pipeline; follow mode
   partition filter) — never a post-hoc filter over data we could have
   skipped reading
 * offset-window snapshot -> ``startingOffsets``/``endingOffsets`` (Q4)
+* source metadata: broker calls on the Kafka path; on the fixture path
+  the cached ``SourceSnapshot`` (sources/fixture.py), so a repeated
+  search over an unchanged path plans with no Spark job
 * regex filter -> anchored ``rlike`` (Q2: Java `matches()` semantics
   via ``\\A(?:pat)\\z``) — Catalyst pushes it to the scan boundary
 * progress tap (O16) -> a side branch unioned in (Q5: progress rows are
@@ -34,8 +37,10 @@ from pyspark.sql import functions as F
 from kbrowse_spark.functions.decoders import msgpack_str_udf, string_decode
 from kbrowse_spark.plans.query_spec import QuerySpec, QuerySpecError
 from kbrowse_spark.sources.fixture import (
+    SourceSnapshot,
     envelope_from_parquet,
     envelope_stream_from_parquet,
+    source_snapshot,
 )
 from kbrowse_spark.sources.kafka import (
     clamp_offset,
@@ -98,10 +103,13 @@ def load_envelope(spark: SparkSession, spec: QuerySpec) -> DataFrame:
     ``spec.follow``, with partition pruning and the starting offset
     window already applied at the source."""
     if spec.source_parquet:
+        # Resolved through this module's global, so a wrapper installed
+        # on planner.envelope_from_parquet sees every miss.
+        snapshot = source_snapshot(spark, spec.source_parquet, envelope_from_parquet)
         if spec.follow:
-            df, snapshot = envelope_stream_from_parquet(spark, spec.source_parquet)
+            df = envelope_stream_from_parquet(spark, spec.source_parquet)
         else:
-            df = snapshot = envelope_from_parquet(spark, spec.source_parquet)
+            df = snapshot.envelope
         return df.filter(_fixture_condition(snapshot, spec))
     if spec.bootstrap_servers:
         assignment = _assign(spec, _broker_partition_counts(spec))
@@ -149,34 +157,39 @@ def _any(conds) -> Column:
     return out
 
 
-def _fixture_condition(snapshot: DataFrame, spec: QuerySpec) -> Column:
+def _fixture_condition(snapshot: SourceSnapshot, spec: QuerySpec) -> Column:
     """The fixture path's stand-in for the Kafka reader's ``assign`` and
     ``startingOffsets`` options: a filter on topics, partitions and the
-    starting offset, resolved against a plan-time snapshot of the
-    source."""
+    starting offset, resolved against the snapshot's offset bounds the
+    way the Kafka path resolves them against broker metadata."""
     cond = F.col("topic").isin(spec.topics) if spec.topics else F.lit(True)
+    if not (spec.default_partition or spec.partitions or spec.relative_offset is not None):
+        return cond  # no metadata needed: no Spark job at plan time
+    if spec.relative_offset is None and spec.num_partitions is not None and spec.topics:
+        bounds = {}  # the hint gives every count: no Spark job either
+    else:
+        bounds = {
+            tp: b for tp, b in snapshot.bounds.items()
+            if not spec.topics or tp[0] in spec.topics
+        }
     if spec.default_partition or spec.partitions:
         # Partition counts: prefer the explicit hint — data inference
         # (max+1) under-counts when high partitions are empty, which
         # would silently break murmur2 default-partition pruning.  The
         # Kafka path always has the true count from broker metadata
         # (kbrowse kafka.clj:51-57); the fixture path needs the hint.
-        snap = snapshot.filter(cond)
+        counts: dict[str, int] = {}
+        for t, p in bounds:
+            counts[t] = max(counts.get(t, 0), p + 1)
         if spec.num_partitions is not None:
-            topics = spec.topics or [
-                r["topic"] for r in snap.select("topic").distinct().collect()
-            ]
-            counts = {t: spec.num_partitions for t in topics}
-        else:
-            counts = {
-                r["topic"]: r["n"]
-                for r in snap.groupBy("topic")
-                .agg((F.max("partition") + 1).alias("n"))
-                .collect()
-            }
+            counts = {t: spec.num_partitions for t in spec.topics or counts}
+        assignment = _assign(spec, counts)
+        bounds = {
+            (t, p): b for (t, p), b in bounds.items() if p in assignment.get(t, ())
+        }
         cond = cond & _any(
             (F.col("topic") == t) & (F.col("partition") == p)
-            for t, ps in _assign(spec, counts).items()
+            for t, ps in assignment.items()
             for p in ps
         )
     if spec.relative_offset is not None:
@@ -185,17 +198,11 @@ def _fixture_condition(snapshot: DataFrame, spec: QuerySpec) -> Column:
         # batch scan reads the snapshot itself, so offset < latest holds
         # by construction (Q4), and follow mode drops the stop bound.
         n = spec.relative_offset
-        snap = (
-            snapshot.filter(cond)
-            .groupBy("topic", "partition")
-            .agg(F.min("offset").alias("e"), (F.max("offset") + 1).alias("l"))
-            .collect()
-        )
         cond = cond & _any(
-            (F.col("topic") == r.topic)
-            & (F.col("partition") == r.partition)
-            & (F.col("offset") >= clamp_offset((r.e if n >= 0 else r.l) + n, r.e, r.l))
-            for r in snap
+            (F.col("topic") == t)
+            & (F.col("partition") == p)
+            & (F.col("offset") >= clamp_offset((e if n >= 0 else l) + n, e, l))
+            for (t, p), (e, l) in sorted(bounds.items())
         )
     return cond
 

@@ -9,7 +9,9 @@ Routes:
 * ``GET /server-configs``    — configured cluster aliases
 * ``GET /health``            — liveness
 
-Error contract (Q8): bad args -> 400 with ``{"error": msg}``.
+Error contract (Q8): bad args -> 400 with ``{"error": msg}``.  A Spark
+failure, whether while planning or mid-stream, still returns a closed
+array: the pioneer, then ``{"error": msg}``.
 
 The response cache reproduces the reference semantics
 (core.clj:41-54,80-84): TTL + max-items, entries above the size cap
@@ -181,7 +183,6 @@ def create_app(spark=None, config: EngineConfig | None = None):
             # immortal thread.
             import queue
 
-            from kbrowse_spark.sinks.pioneer import close_array
             from kbrowse_spark.streaming.follow import run_follow
 
             chunks: queue.Queue = queue.Queue(maxsize=1000)
@@ -205,10 +206,9 @@ def create_app(spark=None, config: EngineConfig | None = None):
             def run() -> None:
                 try:
                     run_follow(get_session(), spec, _QueueWriter(), bounded=False)
-                except Exception as e:  # surface errors on the wire
-                    # Keep the streamed array parseable (run_follow
-                    # never closed it on the failure path).
-                    _put_final(close_array(e))
+                except Exception:  # already on the wire: run_follow
+                    # closed the array with the error element.
+                    app.logger.exception("follow /search failed")
                 finally:
                     _put_final(None)
 
@@ -224,12 +224,18 @@ def create_app(spark=None, config: EngineConfig | None = None):
             return Response(generate_follow(), mimetype="application/json")
 
         from kbrowse_spark.plans.planner import build_scan
-        from kbrowse_spark.sinks.pioneer import close_array, emit_json_array
+        from kbrowse_spark.sinks.pioneer import close_array, emit_json_array, open_array
 
         try:
             df = build_scan(get_session(), spec)
         except QuerySpecError as e:
             return {"error": str(e)}, 400  # Q8: plan-time errors too
+        except Exception as e:  # a Spark job at plan time failed: the
+            # same closed array as a mid-stream failure, never cached.
+            app.logger.exception("/search planning failed")
+            return Response(
+                open_array(pretty=False) + close_array(e), mimetype="application/json"
+            )
 
         def generate():
             # Wall-clock kill switch for bounded scans too (the

@@ -34,9 +34,11 @@ def run_follow(
 
     ``bounded=True`` uses availableNow (scan-to-snapshot then stop);
     ``bounded=False`` polls until the kill switch fires.
-    """
-    stream = build_scan(spark, spec)
 
+    The whole array is written here: ``[`` and the pioneer before the
+    plan is built, and the closing ``]`` always, after an error element
+    when planning or the stream failed.  The failure is then re-raised.
+    """
     out.write(open_array(pretty=False))
     out.flush()
 
@@ -45,20 +47,28 @@ def run_follow(
             out.write(element(render_row(row), pretty=False))
         out.flush()
 
-    writer = stream.writeStream.foreachBatch(emit_batch).outputMode("append")
-    if bounded:
-        query = writer.trigger(availableNow=True).start()
-    else:
-        query = writer.trigger(processingTime=processing_interval).start()
-        # O10 kill switch: protect the cluster from immortal follows
-        # (reference default 86400 s when the query didn't set one).
-        deadline = (
-            spec.stop_after_seconds if spec.stop_after_seconds is not None else 86400
-        )
-        timer = threading.Timer(deadline, query.stop)
-        timer.daemon = True
-        timer.start()
-
-    query.awaitTermination()
-    out.write(close_array())
-    out.flush()
+    error = None
+    try:
+        stream = build_scan(spark, spec)
+        writer = stream.writeStream.foreachBatch(emit_batch).outputMode("append")
+        if bounded:
+            query = writer.trigger(availableNow=True).start()
+        else:
+            query = writer.trigger(processingTime=processing_interval).start()
+            # O10 kill switch: protect the cluster from immortal follows
+            # (reference default 86400 s when the query didn't set one).
+            deadline = (
+                spec.stop_after_seconds
+                if spec.stop_after_seconds is not None
+                else 86400
+            )
+            timer = threading.Timer(deadline, query.stop)
+            timer.daemon = True
+            timer.start()
+        query.awaitTermination()
+    except Exception as e:
+        error = e
+        raise
+    finally:
+        out.write(close_array(error))
+        out.flush()
