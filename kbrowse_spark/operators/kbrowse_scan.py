@@ -2,12 +2,14 @@
 
 The engine's own integration tests (tests/test_kbrowse_parity.py) pin
 the reference's golden behaviors; these queries additionally put the
-scan pipeline's *semantics* under the DuckDB oracle at sf0.01, using an
-envelope view derived from the ``events`` table (topic='events',
-partition=user_id%10, offset=event_id, key=user_id, value=props).
+scan pipeline's *semantics* under the DuckDB oracle at sf0.01.  Each
+runs the /search pipeline itself (plans/planner.build_scan) over the
+``events`` table, which sources/fixture reads as an envelope
+(topic='events', partition=user_id%10, offset=event_id, key=user_id,
+value=props).
 
 Spark `rlike` is find(); kbrowse `re-matches` is full-match (SURVEY
-Q2) — Spark side anchors with \\A(?:..)\\z, DuckDB side uses
+Q2) — the planner anchors with \\A(?:..)\\z, DuckDB side uses
 ``regexp_full_match``, which has exactly the reference's semantics.
 """
 
@@ -17,8 +19,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kbrowse_spark.catalog import register
-from kbrowse_spark.plans.planner import anchored
-from kbrowse_spark.sources.fixture import envelope_from_events
+from kbrowse_spark.plans.planner import build_scan
+from kbrowse_spark.plans.query_spec import QuerySpec
+from kbrowse_spark.sources.tables import table_path
 
 _SQL_ENVELOPE = """
   SELECT CAST(user_id AS VARCHAR) AS key_str,
@@ -31,16 +34,10 @@ _SQL_ENVELOPE = """
 """
 
 
-def _envelope_str(spark: SparkSession, sf_dir: str) -> DataFrame:
-    env = envelope_from_events(spark, sf_dir)
-    return env.select(
-        F.col("key").cast("string").alias("key_str"),
-        F.col("value").cast("string").alias("value_str"),
-        "topic",
-        "partition",
-        "offset",
-        "timestamp",
-    )
+def _scan(spark: SparkSession, sf_dir: str, **options) -> DataFrame:
+    """The /search scan of the events table with these QuerySpec options."""
+    spec = QuerySpec(source_parquet=table_path(sf_dir, "events"), **options)
+    return build_scan(spark, spec.validate())
 
 
 @register(
@@ -60,14 +57,10 @@ def kbrowse_regex_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conjunctive full-match regex filter (O13/Q2): keys 10-19 AND
     props containing k in 40-49.  The filter is pushed into the parquet
     scan by Catalyst (no full materialization of the envelope)."""
-    env = _envelope_str(spark, sf_dir)
     return (
-        env.filter(
-            F.col("key_str").rlike(anchored("1[0-9]"))
-            & F.col("value_str").rlike(anchored('.*"k": 4[0-9].*'))
-        )
+        _scan(spark, sf_dir, key_regex="1[0-9]", value_regex='.*"k": 4[0-9].*')
         .select(
-            F.lit("result").alias("type"),
+            "type",
             "topic",
             "partition",
             "offset",
@@ -101,24 +94,15 @@ def kbrowse_regex_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def kbrowse_scan_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Relative-offset scan window (O6/O8/Q9): per-partition snapshot
     [earliest, latest), start = clamp(earliest+700).  On a Kafka source
-    this compiles to startingOffsets JSON; here the same math runs as a
-    broadcast join against the snapshot aggregate."""
-    env = _envelope_str(spark, sf_dir)
-    snap = env.groupBy("partition").agg(
-        F.min("offset").alias("earliest"), (F.max("offset") + 1).alias("latest")
-    )
-    e, s = env.alias("e"), F.broadcast(snap).alias("s")
+    this compiles to startingOffsets JSON; here the planner resolves it
+    against the source snapshot's offset bounds, as /search does."""
     return (
-        e.join(s, F.col("e.partition") == F.col("s.partition"))
-        .filter(
-            (F.col("e.offset") >= F.least(F.col("s.earliest") + 700, F.col("s.latest")))
-            & (F.col("e.offset") < F.col("s.latest"))
-        )
-        .groupBy("e.partition")
+        _scan(spark, sf_dir, relative_offset=700)
+        .groupBy("partition")
         .agg(
             F.count(F.lit(1)).alias("n_scanned"),
-            F.min("e.offset").alias("first_offset"),
-            F.max("e.offset").alias("last_offset"),
+            F.min("offset").alias("first_offset"),
+            F.max("offset").alias("last_offset"),
         )
         .orderBy("partition")
     )
@@ -146,26 +130,20 @@ def kbrowse_progress_tap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Progress sampling (O16/Q5): every 500th offset emits a progress
     row regardless of match (date-rendered timestamp); result rows keep
     epoch millis — the discriminated-union output stream."""
-    env = _envelope_str(spark, sf_dir)
-    progress = env.filter(F.col("offset") % 500 == 0).select(
-        F.lit("offset").alias("type"),
-        "topic",
-        "partition",
-        "offset",
-        F.date_format("timestamp", "yyyy-MM-dd HH:mm:ss").alias("ts_render"),
-        "key_str",
-        "value_str",
+    ts = F.col("timestamp")
+    return (
+        _scan(spark, sf_dir, value_regex='.*"k": 99.*', print_offset=500)
+        .select(
+            "type",
+            "topic",
+            "partition",
+            "offset",
+            F.when(F.col("type") == "offset", F.date_format(ts, "yyyy-MM-dd HH:mm:ss"))
+            # cast: unix_millis needs TIMESTAMP; fixture may surface ntz
+            .otherwise(F.unix_millis(ts.cast("timestamp")).cast("string"))
+            .alias("ts_render"),
+            "key_str",
+            "value_str",
+        )
+        .orderBy("offset", "type")
     )
-    results = env.filter(F.col("value_str").rlike(anchored('.*"k": 99.*'))).select(
-        F.lit("result").alias("type"),
-        "topic",
-        "partition",
-        "offset",
-        # cast: unix_millis needs TIMESTAMP; fixture may surface ntz
-        F.unix_millis(F.col("timestamp").cast("timestamp"))
-        .cast("string")
-        .alias("ts_render"),
-        "key_str",
-        "value_str",
-    )
-    return progress.unionByName(results).orderBy("offset", "type")

@@ -44,8 +44,7 @@ from kbrowse_spark.sources.fixture import (
 )
 from kbrowse_spark.sources.kafka import (
     clamp_offset,
-    kafka_batch_options,
-    kafka_stream_options,
+    kafka_options,
     resolve_partitions,
     starting_offsets_json,
 )
@@ -118,24 +117,12 @@ def load_envelope(spark: SparkSession, spec: QuerySpec) -> DataFrame:
             if spec.relative_offset is None
             else _broker_starting_offsets(spec, assignment)
         )
-        if spec.follow:
-            reader = spark.readStream
-            opts = kafka_stream_options(
-                spec.bootstrap_servers,
-                assignment,
-                starting_offsets=starting,
-                max_offsets_per_trigger=spec.max_offsets_per_trigger,
-                min_partitions=spec.min_partitions,
-            )
-        else:
-            reader = spark.read
-            opts = kafka_batch_options(
-                spec.bootstrap_servers,
-                assignment,
-                starting_offsets=starting,
-                min_partitions=spec.min_partitions,
-            )
-        return reader.format("kafka").options(**opts).load()
+        reader = spark.readStream if spec.follow else spark.read
+        return (
+            reader.format("kafka")
+            .options(**kafka_options(spec, assignment, starting))
+            .load()
+        )
     raise QuerySpecError("no source: set source_parquet or bootstrap_servers")
 
 

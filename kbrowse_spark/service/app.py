@@ -9,6 +9,11 @@ Routes:
 * ``GET /server-configs``    — configured cluster aliases
 * ``GET /health``            — liveness
 
+``/search`` runs every search, bounded or ``follow=true``, through
+kbrowse_spark/search.run_search, which owns the array framing and the
+kill switch; this module maps it to HTTP and caches bounded responses.
+A client that closes the response cancels its search.
+
 Error contract (Q8): bad args -> 400 with ``{"error": msg}``.  A Spark
 failure, whether while planning or mid-stream, still returns a closed
 array: the pioneer, then ``{"error": msg}``.
@@ -21,6 +26,7 @@ an explicit flag here).
 
 from __future__ import annotations
 
+import itertools
 import threading
 import time
 
@@ -157,117 +163,46 @@ def create_app(spark=None, config: EngineConfig | None = None):
         hit = cache.get(cache_key)
         if hit is not None:
             return Response(hit, mimetype="application/json")
+        from kbrowse_spark.search import run_search
+
         try:
             spec = QuerySpec.from_options(args)
+            if spec.stop_after_seconds is None:
+                # Not set per-query: apply the service-level kill switch.
+                spec.stop_after_seconds = cfg.stop_consumers_after_n_seconds
+            if spec.schema_registry_url is None and "avro" in (
+                spec.key_deserializer,
+                spec.value_deserializer,
+            ):
+                # Per-cluster registry from config (reference search.clj:
+                # 132-133 injects the cluster's registry at search time).
+                spec.schema_registry_url = cfg.schema_registry_urls.get(
+                    spec.bootstrap_servers or cfg.default_bootstrap_servers
+                )
+            chunks = run_search(get_session(), spec)
+            first = next(chunks)  # the search is planned here
         except QuerySpecError as e:
-            return {"error": str(e)}, 400  # Q8
-        if spec.stop_after_seconds is None:
-            # Not set per-query: apply the service-level kill switch.
-            spec.stop_after_seconds = cfg.stop_consumers_after_n_seconds
-        if spec.schema_registry_url is None and "avro" in (
-            spec.key_deserializer,
-            spec.value_deserializer,
-        ):
-            # Per-cluster registry from config (reference search.clj:
-            # 132-133 injects the cluster's registry at search time).
-            spec.schema_registry_url = cfg.schema_registry_urls.get(
-                spec.bootstrap_servers or cfg.default_bootstrap_servers
-            )
-
-        if spec.follow:
-            # Follow mode over HTTP: an unbounded streaming query writes
-            # protocol chunks into a queue drained by the chunked
-            # response (the Spark analogue of the reference's
-            # piped-input-stream).  If the client stops reading, the
-            # writer times out and the watchdog stops the query — no
-            # immortal thread.
-            import queue
-
-            from kbrowse_spark.streaming.follow import run_follow
-
-            chunks: queue.Queue = queue.Queue(maxsize=1000)
-
-            class _QueueWriter:
-                def write(self, s: str) -> None:
-                    chunks.put(s, timeout=300)
-
-                def flush(self) -> None:
-                    pass
-
-            def _put_final(item) -> None:
-                # Blocking with a generous timeout: a slow-but-alive
-                # client must still receive the terminator; only a
-                # fully-stuck consumer drops it.
-                try:
-                    chunks.put(item, timeout=600)
-                except queue.Full:
-                    pass
-
-            def run() -> None:
-                try:
-                    run_follow(get_session(), spec, _QueueWriter(), bounded=False)
-                except Exception:  # already on the wire: run_follow
-                    # closed the array with the error element.
-                    app.logger.exception("follow /search failed")
-                finally:
-                    _put_final(None)
-
-            threading.Thread(target=run, daemon=True).start()
-
-            def generate_follow():
-                while True:
-                    chunk = chunks.get()
-                    if chunk is None:
-                        return
-                    yield chunk
-
-            return Response(generate_follow(), mimetype="application/json")
-
-        from kbrowse_spark.plans.planner import build_scan
-        from kbrowse_spark.sinks.pioneer import close_array, emit_json_array, open_array
-
-        try:
-            df = build_scan(get_session(), spec)
-        except QuerySpecError as e:
-            return {"error": str(e)}, 400  # Q8: plan-time errors too
-        except Exception as e:  # a Spark job at plan time failed: the
-            # same closed array as a mid-stream failure, never cached.
-            app.logger.exception("/search planning failed")
-            return Response(
-                open_array(pretty=False) + close_array(e), mimetype="application/json"
-            )
+            return {"error": str(e)}, 400  # Q8, plan-time errors too
 
         def generate():
-            # Wall-clock kill switch for bounded scans too (the
-            # reference applies stop-running-date to every search,
-            # search.clj:117-121): cancel this query's job group after
-            # the deadline so a huge /search can't pin the cluster.
-            sc = df.sparkSession.sparkContext
-            group = f"search-{time.monotonic_ns()}"
-            sc.setJobGroup(group, "bounded /search", True)
-            timer = threading.Timer(
-                spec.stop_after_seconds, sc.cancelJobGroup, args=(group,)
-            )
-            timer.daemon = True
-            timer.start()
-            # The response is kept for the cache only while it fits
-            # the cache's size cap: a bigger one is never buffered.
-            buf: list[str] | None = []
+            # The response is kept for the cache only while it fits the
+            # cache's size cap, and never for a follow stream.
+            buf: list[str] | None = None if spec.follow else []
             size = 0
             try:
-                for chunk in emit_json_array(df, pretty=False):
+                for chunk in itertools.chain([first], chunks):
                     size += len(chunk)
                     if size > cache.size_limit:
                         buf = None
                     elif buf is not None:
                         buf.append(chunk)
                     yield chunk  # chunked transfer: client reads while we scan
-            except Exception as e:  # cancelled (or failed) mid-stream:
-                # close the array on the wire, never cache the partial.
-                yield close_array(e)
+            except Exception:  # the runner closed the array with the
+                # error on the wire: log it, never cache the partial.
+                app.logger.exception("/search failed")
                 return
             finally:
-                timer.cancel()
+                chunks.close()  # a client that went away cancels the search
             if buf is not None:
                 cache.put(cache_key, "".join(buf))
 

@@ -205,14 +205,6 @@ def _listing(spark: SparkSession, path: str) -> tuple:
     return tuple(sorted(files))
 
 
-def envelope_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ``events`` table of ``sf_dir`` as an envelope (see
-    _to_envelope)."""
-    from kbrowse_spark.sources.tables import load
-
-    return _to_envelope(load(spark, sf_dir, "events"))
-
-
 def golden_topic_a(spark: SparkSession) -> DataFrame:
     """The reference integration-test fixture (FIXTURES.md A2): topic-a,
     10 partitions, records (k0,v0) (k0,v1) (k2,v2) placed by the real

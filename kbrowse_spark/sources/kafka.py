@@ -5,9 +5,9 @@ seeks; in Spark it compiles to *source options* fixed at plan time:
 
 * ``assign``            — explicit topic->partitions JSON (O3/O4/O5)
 * ``startingOffsets``   — per-partition start JSON (O7/O8, Q9 clamping)
-* ``endingOffsets``     — snapshot bound (O6/Q4): "latest" is
-  snapshotted exactly once at planning by the Kafka source, which is
-  precisely kbrowse's seekToEnd-then-stop behavior.
+* ``endingOffsets``     — snapshot bound (O6/Q4) of a bounded search:
+  "latest" is snapshotted exactly once at planning by the Kafka source,
+  which is precisely kbrowse's seekToEnd-then-stop behavior.
 
 The actual broker round-trips (partition counts, earliest/latest
 offsets) arrive as plain dicts so this module needs no Kafka client;
@@ -22,8 +22,12 @@ out-of-range behavior `kafka.clj:121-123` + consumer auto.offset.reset.
 from __future__ import annotations
 
 import json
+from typing import TYPE_CHECKING
 
 from kbrowse_spark.functions.partitioner import default_partition
+
+if TYPE_CHECKING:
+    from kbrowse_spark.plans.query_spec import QuerySpec
 
 
 def resolve_partitions(
@@ -100,81 +104,33 @@ def starting_offsets_json(
     return json.dumps(out)
 
 
-def ending_offsets_json(
-    assignment: dict[str, list[int]],
-    latest: dict[tuple[str, int], int] | None = None,
-) -> str:
-    """Snapshot stop bound (Q4): records at offset >= latest-at-plan
-    are excluded.  With ``latest=None`` the literal "latest" is used —
-    the batch Kafka source snapshots it exactly once at planning."""
-    if latest is None:
-        return "latest"
-    return json.dumps(
-        {
-            t: {str(p): latest[(t, p)] for p in ps}
-            for t, ps in assignment.items()
-        }
-    )
-
-
-def offsets_by_timestamp_json(
-    assignment: dict[str, list[int]], timestamp_ms: int
-) -> str:
-    """`startingOffsetsByTimestamp` / `endingOffsetsByTimestamp` JSON:
-    every assigned partition bound at one epoch-millis instant.  The
-    planner does not pass these options; it applies the start- and
-    stop-timestamp bounds as filters on both source paths."""
-    return json.dumps(
-        {t: {str(p): timestamp_ms for p in ps} for t, ps in sorted(assignment.items())}
-    )
-
-
-def kafka_batch_options(
-    bootstrap_servers: str,
+def kafka_options(
+    spec: QuerySpec,
     assignment: dict[str, list[int]],
     starting_offsets: str,
-    ending_offsets: str = "latest",
-    min_partitions: int | None = None,
 ) -> dict[str, str]:
-    """Options for ``spark.read.format("kafka")``.  One Spark task per
-    topic-partition by default; ``minPartitions`` splits hot partitions
-    into offset sub-ranges for extra parallelism at scale."""
+    """Options for ``format("kafka")``: ``spark.read`` for a bounded
+    search, ``spark.readStream`` when ``spec.follow``.
+
+    A bounded search stops at ``endingOffsets`` "latest", which the
+    batch source snapshots once at planning (Q4); follow mode has no
+    ending bound, and ``maxOffsetsPerTrigger`` bounds each micro-batch
+    (back-pressure: without it the first batch after a restart tries to
+    swallow the whole backlog).  ``minPartitions`` splits hot
+    topic-partitions into offset sub-ranges on both, so one huge
+    partition does not pin one task."""
     opts = {
-        "kafka.bootstrap.servers": bootstrap_servers,
+        "kafka.bootstrap.servers": spec.bootstrap_servers,
         "assign": assign_json(assignment),
         "startingOffsets": starting_offsets,
-        "endingOffsets": ending_offsets,
         # kbrowse parity: no consumer group semantics, autocommit off
         # (kafka.clj:40-49) — the Spark source already never commits.
         "failOnDataLoss": "false",
     }
-    if min_partitions:
-        opts["minPartitions"] = str(min_partitions)
-    return opts
-
-
-def kafka_stream_options(
-    bootstrap_servers: str,
-    assignment: dict[str, list[int]],
-    starting_offsets: str,
-    max_offsets_per_trigger: int | None = None,
-    min_partitions: int | None = None,
-) -> dict[str, str]:
-    """Options for follow mode (``readStream``) — no ending bound.
-
-    ``maxOffsetsPerTrigger`` bounds each micro-batch's total record
-    count (back-pressure on a hot topic: without it the first batch
-    after a restart tries to swallow the whole backlog);
-    ``minPartitions`` splits hot topic-partitions into offset
-    sub-ranges so one 100 TB partition doesn't pin one task."""
-    opts = {
-        "kafka.bootstrap.servers": bootstrap_servers,
-        "assign": assign_json(assignment),
-        "startingOffsets": starting_offsets,
-        "failOnDataLoss": "false",
-    }
-    if max_offsets_per_trigger:
-        opts["maxOffsetsPerTrigger"] = str(max_offsets_per_trigger)
-    if min_partitions:
-        opts["minPartitions"] = str(min_partitions)
+    if not spec.follow:
+        opts["endingOffsets"] = "latest"
+    elif spec.max_offsets_per_trigger:
+        opts["maxOffsetsPerTrigger"] = str(spec.max_offsets_per_trigger)
+    if spec.min_partitions:
+        opts["minPartitions"] = str(spec.min_partitions)
     return opts

@@ -3,7 +3,7 @@
 Round-4 gap: every Kafka behavior was verified as pure option math +
 fixture equivalence; ``spark.read.format("kafka")`` plan construction
 itself had never executed.  These tests push the planner's emitted
-assign/startingOffsets/endingOffsets JSON through the real
+assign/startingOffsets/endingOffsets options through the real
 DataFrameReader:
 
 * with the spark-sql-kafka jar deployed, ANALYSIS must succeed with no
@@ -22,9 +22,9 @@ from __future__ import annotations
 
 import json
 
+from kbrowse_spark.plans.query_spec import QuerySpec
 from kbrowse_spark.sources.kafka import (
-    ending_offsets_json,
-    kafka_batch_options,
+    kafka_options,
     resolve_partitions,
     starting_offsets_json,
 )
@@ -61,14 +61,15 @@ def _planned_options() -> dict[str, str]:
     )
     earliest = {(t, p): 5 for t, ps in assignment.items() for p in ps}
     latest = {(t, p): 500 for t, ps in assignment.items() for p in ps}
-    return kafka_batch_options(
-        "broker-1:9092,broker-2:9092",
-        assignment,
-        starting_offsets=starting_offsets_json(
-            assignment, earliest, latest, relative_offset=-100
-        ),
-        ending_offsets=ending_offsets_json(assignment, latest),
+    spec = QuerySpec(
+        bootstrap_servers="broker-1:9092,broker-2:9092",
+        topics=["orders", "events"],
         min_partitions=8,
+    ).validate()
+    return kafka_options(
+        spec,
+        assignment,
+        starting_offsets_json(assignment, earliest, latest, relative_offset=-100),
     )
 
 
@@ -78,6 +79,7 @@ def test_planner_options_reach_kafka_source_resolution(spark):
     assert json.loads(opts["assign"]) == {"orders": [0, 1, 3], "events": [0, 1]}
     starts = json.loads(opts["startingOffsets"])
     assert starts["orders"]["3"] == 400  # latest-100, within [5, 500]
+    assert opts["endingOffsets"] == "latest"  # the batch snapshot bound (Q4)
 
     reader = spark.read.format("kafka")
     for k, v in opts.items():

@@ -5,6 +5,7 @@ plus the semantics quirks from SURVEY.md §2b.
 
 from __future__ import annotations
 
+import dataclasses
 import json
 
 import pytest
@@ -238,8 +239,7 @@ def test_relative_offset_clamping(spark, topic_a_path):
 def test_option_math_pure():
     from kbrowse_spark.sources.kafka import (
         assign_json,
-        ending_offsets_json,
-        kafka_batch_options,
+        kafka_options,
         resolve_partitions,
         starting_offsets_json,
     )
@@ -260,8 +260,9 @@ def test_option_math_pure():
     assert s == {"a": {"0": 90, "1": 40, "2": 0}}  # tail-10, clamped at earliest
     s2 = json.loads(starting_offsets_json({"a": [0]}, earliest, latest, 200))
     assert s2 == {"a": {"0": 100}}  # clamped at latest (Q9)
-    assert ending_offsets_json({"a": [0]}) == "latest"
-    opts = kafka_batch_options("h:9092", asg, "earliest")
+    spec = QuerySpec(bootstrap_servers="h:9092", topics=["a", "b"]).validate()
+    opts = kafka_options(spec, asg, "earliest")
+    assert opts["endingOffsets"] == "latest"  # batch snapshot bound (Q4)
     assert json.loads(opts["assign"]) == {"a": [0, 1, 2], "b": [0, 1]}
 
 
@@ -269,22 +270,20 @@ def test_hot_topic_scale_knobs():
     """minPartitions (batch + stream) and maxOffsetsPerTrigger (stream)
     — the two knobs a hot 100 TB topic needs — flow from QuerySpec into
     the source options."""
-    from kbrowse_spark.sources.kafka import (
-        kafka_batch_options,
-        kafka_stream_options,
-    )
+    from kbrowse_spark.sources.kafka import kafka_options
 
     asg = {"a": [0, 1]}
-    opts = kafka_batch_options("h:9092", asg, "earliest", min_partitions=64)
+    base = QuerySpec(bootstrap_servers="h:9092", topics=["a"]).validate()
+    knobs = dataclasses.replace(base, max_offsets_per_trigger=100000, min_partitions=64)
+    opts = kafka_options(knobs, asg, "earliest")
     assert opts["minPartitions"] == "64"
     assert "maxOffsetsPerTrigger" not in opts  # batch has no trigger
-    sopts = kafka_stream_options(
-        "h:9092", asg, "earliest", max_offsets_per_trigger=100000, min_partitions=64
-    )
+    sopts = kafka_options(dataclasses.replace(knobs, follow=True), asg, "earliest")
     assert sopts["maxOffsetsPerTrigger"] == "100000"
     assert sopts["minPartitions"] == "64"
+    assert "endingOffsets" not in sopts  # follow has no ending bound
     # unset -> absent (Spark defaults apply)
-    sopts2 = kafka_stream_options("h:9092", asg, "earliest")
+    sopts2 = kafka_options(dataclasses.replace(base, follow=True), asg, "earliest")
     assert "maxOffsetsPerTrigger" not in sopts2 and "minPartitions" not in sopts2
     # QuerySpec parsing + validation
     spec = QuerySpec.from_options(
@@ -428,14 +427,6 @@ def test_multi_topic_per_topic_partitions(spark, tmp_path):
     ).validate()
     rows2 = json.loads(collect_protocol(build_scan(spark, spec2)))
     assert {r["value"] for r in rows2[1:]} == {"x2"}
-
-
-def test_offsets_by_timestamp_json():
-    from kbrowse_spark.sources.kafka import offsets_by_timestamp_json
-
-    s = json.loads(offsets_by_timestamp_json({"a": [0, 1], "b": [0]}, 1700000000000))
-    assert s == {"a": {"0": 1700000000000, "1": 1700000000000},
-                 "b": {"0": 1700000000000}}
 
 
 def test_num_partitions_hint_fixes_inference(spark, tmp_path):

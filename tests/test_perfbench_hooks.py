@@ -79,3 +79,49 @@ def test_tracer_bound_names_exist():
                 break
             obj = getattr(obj, attr)
     assert not missing, f"perfbench/service.py binds names the engine lost: {missing}"
+
+
+def test_search_paths_call_traced_layers(spark, tmp_path, monkeypatch):
+    """The tracer's wrappers only measure what the search path calls
+    through these module attributes: a bounded /search must reach
+    planner.build_scan, pioneer.emit_json_array and pioneer.render_row,
+    a follow /search follow.render_row."""
+    import collections
+    import json
+
+    from kbrowse_spark.plans import planner
+    from kbrowse_spark.service.app import create_app
+    from kbrowse_spark.sinks import pioneer
+    from kbrowse_spark.sources.fixture import golden_topic_a
+    from kbrowse_spark.streaming import follow
+
+    calls: collections.Counter = collections.Counter()
+    for module, alias, name in (
+        (planner, "planner", "build_scan"),
+        (pioneer, "pioneer", "emit_json_array"),
+        (pioneer, "pioneer", "render_row"),
+        (follow, "follow", "render_row"),
+    ):
+        def counted(*args, _fn=getattr(module, name), _key=f"{alias}.{name}", **kwargs):
+            calls[_key] += 1
+            return _fn(*args, **kwargs)
+
+        monkeypatch.setattr(module, name, counted)
+
+    path = str(tmp_path / "topic_a.parquet")
+    golden_topic_a(spark).write.parquet(path)
+    c = create_app(spark=spark).test_client()
+    qs = f"source-parquet={path}&topics=topic-a"
+    rows = json.loads(c.get(f"/search?{qs}").get_data(as_text=True))
+    assert len(rows) == 4
+    assert calls == {"planner.build_scan": 1, "pioneer.emit_json_array": 1,
+                     "pioneer.render_row": 3}
+
+    calls.clear()
+    r = c.get(f"/search?{qs}&follow=true&stop-after-seconds=120", buffered=False)
+    chunks = iter(r.response)
+    assert next(chunks).startswith(b"[")
+    for _ in range(3):  # the three records, one element each
+        assert next(chunks).startswith(b", {")
+    r.close()
+    assert calls == {"planner.build_scan": 1, "follow.render_row": 3}

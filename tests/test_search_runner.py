@@ -1,0 +1,115 @@
+"""The one search runner (kbrowse_spark/search.py) behind /search and
+the CLI: a consumer that goes away stops its search, and every failure,
+a corrupt source or a passed deadline, ends with a closed array."""
+
+from __future__ import annotations
+
+import json
+import time
+
+import pytest
+
+from kbrowse_spark.service.app import create_app
+from kbrowse_spark.sources.fixture import golden_topic_a
+
+
+@pytest.fixture(scope="module")
+def topic_a_path(spark, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("runner") / "topic_a.parquet")
+    golden_topic_a(spark).write.parquet(path)
+    return path
+
+
+@pytest.fixture
+def cli(spark, monkeypatch, capsys):
+    """Run the CLI on the test session: (exit code, stdout)."""
+    from kbrowse_spark import cli as cli_module
+    from kbrowse_spark import session
+
+    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
+
+    def run(*argv: str) -> tuple[int, str]:
+        code = cli_module.main(list(argv))
+        return code, capsys.readouterr().out
+
+    return run
+
+
+def _closed_with_error(text: str) -> None:
+    rows = json.loads(text)
+    assert rows[0] == {"type": "pioneer"}
+    assert list(rows[-1]) == ["error"] and rows[-1]["error"]
+
+
+def test_follow_client_close_stops_stream(spark, topic_a_path):
+    """A follow /search whose client closes the response stops its
+    streaming query, long before the kill switch."""
+    before = {q.id for q in spark.streams.active}
+    c = create_app(spark=spark).test_client()
+    r = c.get(
+        f"/search?source-parquet={topic_a_path}&topics=topic-a&follow=true"
+        "&stop-after-seconds=600",
+        buffered=False,
+    )
+    assert r.status_code == 200
+    assert next(iter(r.response)).startswith(b'[{"type": "pioneer"}')
+
+    def ours():
+        return [q for q in spark.streams.active if q.id not in before]
+
+    assert ours(), "the follow query should be running"
+    r.close()
+    deadline = time.monotonic() + 10
+    while ours() and time.monotonic() < deadline:
+        time.sleep(0.1)
+    assert not ours()
+
+
+def test_cli_bounded_failure_closes_array(tmp_path, cli):
+    """A bounded CLI search over a corrupt file prints the closed
+    [pioneer, {"error": ...}] array on stdout and exits 1, as /search
+    and CLI follow do."""
+    d = tmp_path / "corrupt"
+    d.mkdir()
+    (d / "x.parquet").write_bytes(b"not a parquet file" * 8)
+    code, out = cli("--source-parquet", str(d))
+    assert code == 1
+    _closed_with_error(out)
+
+
+def test_bounded_deadline_closes_array(spark, topic_a_path, monkeypatch, cli):
+    """A bounded search whose deadline passes mid-scan (a slow decode
+    stands in for a huge topic) is cancelled and ends with a closed
+    array carrying the error, over /search and from the CLI."""
+    from pyspark.sql import functions as F
+
+    from kbrowse_spark.plans import planner
+
+    @F.udf("string")
+    def slow_decode(b):
+        import time as _time
+
+        _time.sleep(5)
+        return bytes(b).decode() if b is not None else ""
+
+    monkeypatch.setattr(planner, "string_decode", slow_decode)
+    qs = f"source-parquet={topic_a_path}&topics=topic-a&stop-after-seconds=1"
+
+    # Unhindered, a search takes at least 10 s: each row decodes its key
+    # and its value at 5 s each.
+    c = create_app(spark=spark).test_client()
+    t0 = time.monotonic()
+    r = c.get(f"/search?{qs}")
+    assert r.status_code == 200
+    _closed_with_error(r.get_data(as_text=True))
+    assert time.monotonic() - t0 < 8
+    assert c.get(f"/cached?{qs}").status_code == 404
+
+    t0 = time.monotonic()
+    code, out = cli(
+        "--source-parquet", topic_a_path, "--topics", "topic-a",
+        "--stop-after-seconds", "1",
+    )
+    assert code == 1
+    _closed_with_error(out)
+    assert time.monotonic() - t0 < 8

@@ -7,7 +7,6 @@ from __future__ import annotations
 import dataclasses
 import datetime
 import glob
-import io
 import itertools
 import json
 import os
@@ -28,7 +27,6 @@ from kbrowse_spark.sources.fixture import (
     golden_topic_a,
     source_snapshot,
 )
-from kbrowse_spark.streaming.follow import run_follow
 
 CORRUPT = b"not a parquet file" * 8
 _groups = itertools.count()
@@ -171,7 +169,7 @@ def test_listing_skips_files_spark_skips(spark, tmp_path):
     assert listed == sorted(parts + [os.path.join("_p=1", "q.parquet")])
 
 
-def test_followed_directory_keeps_one_snapshot(spark, tmp_path, monkeypatch):
+def test_followed_directory_keeps_one_snapshot(spark, tmp_path, monkeypatch, follow_caught_up):
     """Files landing in a followed directory replace its snapshot; the
     cache never holds more than the one entry for that path."""
     monkeypatch.setattr(fixture, "_SNAPSHOTS", OrderedDict())
@@ -180,10 +178,9 @@ def test_followed_directory_keeps_one_snapshot(spark, tmp_path, monkeypatch):
     spec = QuerySpec(source_parquet=d, topics=["t"], relative_offset=-1).validate()
     for i in range(1, 4):
         _land(spark, d, f"f{i}.parquet", range(2 * i, 2 * i + 2))
-        buf = io.StringIO()
-        run_follow(spark, dataclasses.replace(spec, follow=True), buf, bounded=True)
+        followed = follow_caught_up(dataclasses.replace(spec, follow=True))
         # follow keeps the start bound: from the latest offset on.
-        assert [r["value"] for r in json.loads(buf.getvalue())[1:]] == [f"v{2 * i + 1}"]
+        assert [r["value"] for r in json.loads(followed)[1:]] == [f"v{2 * i + 1}"]
         assert _values(spark, spec) == [f"v{2 * i + 1}"]
     assert list(fixture._SNAPSHOTS) == [d]
     key, _snap = fixture._SNAPSHOTS[d]

@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import dataclasses
 import datetime
-import io
 import json
 import os
 import time
@@ -70,19 +69,16 @@ def test_watermark_drops_late_data(spark, tmp_path):
     assert 3 not in rows
 
 
-def test_follow_mode_protocol(spark, tmp_path):
+def test_follow_mode_protocol(spark, tmp_path, follow_caught_up):
     from kbrowse_spark.plans.query_spec import QuerySpec
     from kbrowse_spark.sources.fixture import golden_topic_a
-    from kbrowse_spark.streaming.follow import run_follow
 
     path = str(tmp_path / "topic_a.parquet")
     golden_topic_a(spark).write.parquet(path)
     spec = QuerySpec(
         source_parquet=path, topics=["topic-a"], key_regex="k.*", follow=True
     ).validate()
-    buf = io.StringIO()
-    run_follow(spark, spec, buf, bounded=True)
-    rows = json.loads(buf.getvalue())
+    rows = json.loads(follow_caught_up(spec))
     assert rows[0] == {"type": "pioneer"}
     assert len(rows) == 4
     assert [r["value"] for r in rows[1:]] == ["v0", "v1", "v2"]
@@ -112,13 +108,12 @@ PARITY_CASES = {
 
 
 @pytest.mark.parametrize("case", sorted(PARITY_CASES))
-def test_follow_matches_search(spark, sf_dir, topic_a_path, case):
-    """Bounded follow emits exactly the rows of the batch /search scan:
-    both run the one pipeline in plans/planner.py."""
+def test_follow_matches_search(spark, sf_dir, topic_a_path, case, follow_caught_up):
+    """Follow, once caught up, has emitted exactly the rows of the batch
+    /search scan: both run the one pipeline in plans/planner.py."""
     from kbrowse_spark.plans.planner import build_scan
     from kbrowse_spark.plans.query_spec import QuerySpec
     from kbrowse_spark.sinks.pioneer import collect_protocol
-    from kbrowse_spark.streaming.follow import run_follow
 
     options, values = PARITY_CASES[case]
     if values is None:
@@ -127,9 +122,8 @@ def test_follow_matches_search(spark, sf_dir, topic_a_path, case):
         source = {"source_parquet": topic_a_path, "topics": ["topic-a"]}
     spec = QuerySpec(**source, **options).validate()
     batch = json.loads(collect_protocol(build_scan(spark, spec)))
-    buf = io.StringIO()
-    run_follow(spark, dataclasses.replace(spec, follow=True), buf, bounded=True)
-    assert json.loads(buf.getvalue()) == batch
+    followed = follow_caught_up(dataclasses.replace(spec, follow=True))
+    assert json.loads(followed) == batch
     assert batch[0] == {"type": "pioneer"} and len(batch) > 1
     if values is not None:
         assert [r["value"] for r in batch[1:]] == values
@@ -139,16 +133,14 @@ def test_follow_empty_directory(spark, tmp_path):
     """Following an envelope directory with no files yet emits the
     pioneer and closes on the kill switch."""
     from kbrowse_spark.plans.query_spec import QuerySpec
-    from kbrowse_spark.streaming.follow import run_follow
+    from kbrowse_spark.search import run_search
 
     src = tmp_path / "empty"
     src.mkdir()
     spec = QuerySpec(
         source_parquet=str(src), follow=True, stop_after_seconds=3
     ).validate()
-    buf = io.StringIO()
-    run_follow(spark, spec, buf, bounded=False, processing_interval="500 milliseconds")
-    assert json.loads(buf.getvalue()) == [{"type": "pioneer"}]
+    assert json.loads("".join(run_search(spark, spec))) == [{"type": "pioneer"}]
 
 
 def test_topics_cache_refresh_and_resilience():
@@ -178,8 +170,8 @@ def test_follow_unbounded_kill_switch(spark, tmp_path):
     import time as _time
 
     from kbrowse_spark.plans.query_spec import QuerySpec
+    from kbrowse_spark.search import run_search
     from kbrowse_spark.sources.fixture import golden_topic_a
-    from kbrowse_spark.streaming.follow import run_follow
 
     path = str(tmp_path / "topic_a.parquet")
     golden_topic_a(spark).write.parquet(path)
@@ -190,11 +182,10 @@ def test_follow_unbounded_kill_switch(spark, tmp_path):
         follow=True,
         stop_after_seconds=4,
     ).validate()
-    buf = io.StringIO()
     t0 = _time.monotonic()
-    run_follow(spark, spec, buf, bounded=False, processing_interval="500 milliseconds")
+    text = "".join(run_search(spark, spec))
     elapsed = _time.monotonic() - t0
-    rows = json.loads(buf.getvalue())
+    rows = json.loads(text)
     assert [r["value"] for r in rows[1:]] == ["v0", "v1", "v2"]
     assert elapsed < 60  # watchdog fired; no immortal query
 
@@ -238,8 +229,8 @@ def test_follow_emits_mid_stream_data(spark, tmp_path):
     import time as _time
 
     from kbrowse_spark.plans.query_spec import QuerySpec
+    from kbrowse_spark.search import run_search
     from kbrowse_spark.sources.fixture import ENVELOPE_SCHEMA, golden_topic_a
-    from kbrowse_spark.streaming.follow import run_follow
 
     src = str(tmp_path / "live")
     os.makedirs(src)
@@ -251,12 +242,8 @@ def test_follow_emits_mid_stream_data(spark, tmp_path):
         follow=True,
         stop_after_seconds=20,
     ).validate()
-    buf = io.StringIO()
-    t = threading.Thread(
-        target=run_follow,
-        args=(spark, spec, buf),
-        kwargs={"bounded": False, "processing_interval": "1 second"},
-    )
+    chunks: list[str] = []
+    t = threading.Thread(target=lambda: chunks.extend(run_search(spark, spec)))
     t.start()
     _time.sleep(7)
     ts = datetime.datetime(2024, 1, 2)
@@ -264,7 +251,8 @@ def test_follow_emits_mid_stream_data(spark, tmp_path):
         [(b"k9", b"v-late", "topic-a", 1, 0, ts, 0)], ENVELOPE_SCHEMA
     ).coalesce(1).write.parquet(f"{src}/late.parquet")
     t.join(timeout=60)
-    vals = [r["value"] for r in json.loads(buf.getvalue())[1:]]
+    assert not t.is_alive()
+    vals = [r["value"] for r in json.loads("".join(chunks))[1:]]
     assert "v-late" in vals
     assert {"v0", "v1", "v2"} <= set(vals)
 
