@@ -3,12 +3,15 @@
 ``python -m kbrowse_spark.cli --source-parquet <envelope.parquet>
 --key-regex 'k0' ...`` prints the pioneer-protocol JSON array to
 stdout, one chunk per line group, exactly like the reference CLI's
-println sink (`src/kbrowse/core.clj:164-175`).  Every search, bounded
-or ``--follow``, runs through kbrowse_spark/search.run_search, with the
-HTTP service's option parser and validator.
+println sink (`src/kbrowse/core.clj:164-175`).  Every search, bounded,
+``--follow`` or written with ``--output-parquet``, runs through
+kbrowse_spark/search.run_search, with the HTTP service's option parser
+and validator.
 
-Exit codes: 0; 1 when the search failed (stdout still holds the closed
-array, ending with the error element); 2 for invalid options.
+Exit codes: 0; 1 when the search failed (``{"error": msg}`` on stderr;
+stdout still holds the closed array, ending with the error element,
+unless the rows went to ``--output-parquet``); 2 for invalid options,
+``--output-parquet`` with ``--follow`` among them.
 """
 
 from __future__ import annotations
@@ -48,7 +51,8 @@ def build_arg_parser() -> argparse.ArgumentParser:
     p.add_argument("--pretty", action="store_true")
     p.add_argument(
         "--output-parquet",
-        help="write result rows to this parquet path instead of stdout",
+        help="write result rows to this parquet path instead of stdout "
+        "(bounded searches only)",
     )
     p.add_argument(
         "--stop-after-seconds",
@@ -76,6 +80,8 @@ def main(argv: list[str] | None = None) -> int:
         spec = QuerySpec.from_options(
             {k: v for k, v in vars(args).items() if v is not None}
         )
+        if args.output_parquet and spec.follow:
+            raise QuerySpecError("--output-parquet cannot be used with --follow")
     except QuerySpecError as e:
         return fail(e, 2)
     for side, deser, schema in (
@@ -90,27 +96,18 @@ def main(argv: list[str] | None = None) -> int:
                 file=sys.stderr,
             )
 
+    from kbrowse_spark.search import run_search
     from kbrowse_spark.session import get_spark
 
     spark = get_spark("kbrowse_cli")
-    if args.output_parquet and not spec.follow:
-        from kbrowse_spark.plans.planner import build_scan
-
-        # Parquet sink: distributed write, no driver materialization.
-        build_scan(spark, spec).write.mode("overwrite").parquet(args.output_parquet)
-        print(f'{{"written": "{args.output_parquet}"}}')
-        return 0
-
-    from kbrowse_spark.search import run_search
-
     code = 0
     try:
-        for chunk in run_search(spark, spec, pretty=args.pretty):
+        for chunk in run_search(spark, spec, args.pretty, args.output_parquet):
             sys.stdout.write(chunk)
             sys.stdout.flush()  # incremental emission, reference parity
     except QuerySpecError as e:
         return fail(e, 2)
-    except Exception as e:  # the array on stdout is closed with the error
+    except Exception as e:  # any array on stdout is closed with the error
         code = fail(e, 1)
     sys.stdout.write("\n")
     return code

@@ -41,31 +41,6 @@ def cached(
         return df
 
 
-def adopt(
-    spark: SparkSession, sf_dir: str, key: str, df: DataFrame
-) -> DataFrame:
-    """Register an ALREADY-CACHED DataFrame under the invalidate()
-    lifecycle, unpersisting whatever previously held the key.
-
-    For iterative builders (HITS) whose per-round relations are cached
-    inside the loop: rounds 1..R-1 are unpersisted as the loop
-    advances, but the FINAL round's relations underpin the returned
-    DataFrame and must stay cached past the builder's return — adopt()
-    hands their lifetime to the registry so repeated invocations don't
-    pin one orphan per run and invalidate() can reclaim the last one
-    (ADVICE r8)."""
-    full_key = (spark.sparkContext.applicationId, sf_dir, key)
-    with _LOCK:
-        old = _REGISTRY.get(full_key)
-        if old is not None and old is not df:
-            try:
-                old.unpersist()
-            except Exception:  # noqa: BLE001 - session may be gone
-                pass
-        _REGISTRY[full_key] = df
-    return df
-
-
 def cached_value(
     spark: SparkSession, sf_dir: str, key: str, build: Callable[[], object]
 ) -> object:

@@ -1,6 +1,11 @@
-"""Graph operators: fixed-point PageRank over the customer–supplier
-interaction graph (SURVEY §2c extension surface — iterative graph
-algorithms beyond k-means/connected-components).
+"""Graph operators over the customer–supplier interaction graph —
+PageRank, LPA, HITS, k-core, multi-source BFS and modularity — plus the
+recursive-CTE path enumeration (SURVEY §2c extension surface — iterative
+graph algorithms beyond k-means/connected-components).
+
+Every interaction-graph operator derives its edges from one cached
+relation, ``_trading_pairs``: the distinct (customer, supplier) pairs of
+orders ⋈ lineitem, the ``pairs`` CTE their oracles spell out.
 
 The reference engine has no iterative operators (its only loop is the
 Kafka poll, `/root/reference/src/kbrowse/kafka.clj:61-123`); PageRank
@@ -20,12 +25,48 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kbrowse_spark.catalog import register
+from kbrowse_spark.functions.cache_registry import cached
 from kbrowse_spark.sources.tables import load
 
 _PR_ITERS = 3
 _PR_SCALE = 10**12
 _PR_TOP = 20
 _DAMP_NUM, _DAMP_DEN = 85, 100  # d = 0.85 as an exact rational
+
+
+def _trading_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cached distinct (c, s) customer-supplier trading pairs of
+    orders ⋈ lineitem — the oracles' ``pairs`` CTE and the one Spark
+    build of the interaction graph: PageRank, LPA, HITS, k-core, BFS
+    and modularity all derive their edges from it."""
+
+    def build():
+        o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+        li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+        return (
+            o.join(li, o["o_orderkey"] == li["l_orderkey"])
+            .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
+            .distinct()
+        )
+
+    return cached(spark, sf_dir, "trading_pairs", build)
+
+
+def _lpa_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cached symmetric edge list (src, dst) over ``'c'||c`` and
+    ``'s'||s`` node ids, both directions of every trading pair — the
+    oracles' ``edges`` CTE, derived from :func:`_trading_pairs` the
+    same way."""
+
+    def build():
+        pairs = _trading_pairs(spark, sf_dir)
+        c = F.concat(F.lit("c"), F.col("c").cast("string"))
+        s = F.concat(F.lit("s"), F.col("s").cast("string"))
+        return pairs.select(c.alias("src"), s.alias("dst")).unionAll(
+            pairs.select(s.alias("src"), c.alias("dst"))
+        )
+
+    return cached(spark, sf_dir, "lpa_edges", build)
 
 
 def _pagerank_oracle() -> str:
@@ -89,37 +130,14 @@ def pagerank_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration; for >> 3 iterations add a localCheckpoint cadence as
     dedup_cluster_assign does.
     """
-    from kbrowse_spark.functions.cache_registry import cached
-
     def build_edges_deg():
-        o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-        li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-        pairs = (
-            o.join(li, o["o_orderkey"] == li["l_orderkey"])
-            .select(
-                F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias(
-                    "cnode"
-                ),
-                F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias(
-                    "snode"
-                ),
-            )
-            .distinct()
-        )
-        edges = pairs.select(
-            F.col("cnode").alias("src"), F.col("snode").alias("dst")
-        ).unionAll(
-            pairs.select(F.col("snode").alias("src"), F.col("cnode").alias("dst"))
-        )
+        edges = _lpa_edges(spark, sf_dir)
         deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-        # Loop-invariant edge + src out-degree, cached PARTITIONED BY
-        # dst (r15, guide §2.4 "two operations keyed the same way share
-        # one exchange"): every iteration's only shuffle was the
-        # groupBy(dst) of edge-grain contribs; with the cache already
-        # hash-partitioned on dst (and the rank join a broadcast that
-        # preserves partitioning), the per-iteration aggregate is
-        # exchange-free — the one-time repartition here replaces
-        # {iters} per-iteration edge exchanges.
+        # Loop-invariant edge + src out-degree, cached partitioned by
+        # dst: every iteration's only shuffle would be the groupBy(dst)
+        # of edge-grain contributions; with the cache hash-partitioned
+        # on dst (and the rank join a broadcast that keeps that
+        # partitioning) the per-iteration aggregate is exchange-free.
         return edges.join(deg, "src").repartition(F.col("dst"))
 
     edges_deg = cached(spark, sf_dir, "pagerank_edges_deg", build_edges_deg)
@@ -133,10 +151,9 @@ def pagerank_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Rank tables are node-grain (orders of magnitude below the
         # edge list) — broadcast them so each iteration is a single
         # pass over the CACHED edge partitions instead of a sort-merge
-        # join that re-shuffles every edge per iteration (r14; the
-        # _BFS_BROADCAST_FRONTIER posture — a deployment whose node
-        # table outgrows executors uses by-src-bucketed edges and a
-        # co-partitioned join instead).
+        # join that re-shuffles every edge per iteration.  A node table
+        # that outgrows executors needs by-src-bucketed edges and a
+        # co-partitioned join instead.
         ranks = (
             edges_deg.join(F.broadcast(ranks), edges_deg["src"] == ranks["id"])
             .select(
@@ -264,7 +281,7 @@ def recursive_cte_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("p"),
         )
         .filter(F.col("p") >= _PATH_MIN_P)
-        # Materialize the |types|^2-bounded edge list once (r14): the
+        # Materialize the |types|^2-bounded edge list once: the
         # recursive UNION ALL references the view at the seed AND at
         # every recursive step, and each reference re-planned the
         # corpus-grain lag window + aggregate behind it — depth+1
@@ -305,40 +322,6 @@ _LPA_ITERS = 2
 _LPA_TOP = 20
 
 
-def _lpa_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cached symmetric customer-supplier edge list — the ONE Spark
-    definition of the interaction graph (shared by LPA, modularity,
-    and bfs_multisource_hops)."""
-    from kbrowse_spark.functions.cache_registry import cached
-
-    def build_edges():
-        o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-        li = load(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_suppkey"
-        )
-        pairs = (
-            o.join(li, o["o_orderkey"] == li["l_orderkey"])
-            .select(
-                F.concat(
-                    F.lit("c"), F.col("o_custkey").cast("string")
-                ).alias("cnode"),
-                F.concat(
-                    F.lit("s"), F.col("l_suppkey").cast("string")
-                ).alias("snode"),
-            )
-            .distinct()
-        )
-        return pairs.select(
-            F.col("cnode").alias("src"), F.col("snode").alias("dst")
-        ).unionAll(
-            pairs.select(
-                F.col("snode").alias("src"), F.col("cnode").alias("dst")
-            )
-        )
-
-    return cached(spark, sf_dir, "lpa_edges", build_edges)
-
-
 def _lpa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(id, label) after the synchronous LPA rounds — factored from
     lpa_communities so graph_modularity_lpa scores the SAME
@@ -349,10 +332,9 @@ def _lpa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = edges.select(F.col("src").alias("id")).distinct().select(
         "id", F.col("id").alias("label")
     )
-    # Per-round broadcast of the node-grain label table (r14): the
-    # cached edge list stays unshuffled; only the (dst, label)
-    # histogram rows are exchanged for the argmax window.  Same
-    # deployment caveat as _BFS_BROADCAST_FRONTIER.
+    # Per-round broadcast of the node-grain label table: the cached
+    # edge list stays unshuffled; only the (dst, label) histogram rows
+    # are exchanged for the argmax window.
     for _ in range(_LPA_ITERS):
         cnt = (
             edges.join(F.broadcast(labels), edges["src"] == labels["id"])
@@ -514,13 +496,12 @@ def hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     max normalizer stay lazy (a window over the model-grain supplier
     aggregate) and broadcast straight into the customer half-round —
     and only the customer ranks come back to the driver per iteration
-    (r14: the previous shape cached each half-round's rank table and
-    pulled only the max scalar, but building the next broadcast
-    already materializes the rank table driver-side, so the extra
-    cache+collect pair per half-round — 2-3 jobs each, ~0.95 s/job of
-    fixed machinery — bought nothing).  Driver-side renormalization is
-    the same overflow-free positive-int floor division (Python ``//``
-    == SQL DIV for non-negative operands), and round 1 folds the
+    (a cached rank table with a scalar-only collect per half-round
+    would cost extra jobs and buy nothing: building the next broadcast
+    already materializes the rank table driver-side).  Driver-side
+    renormalization is the same overflow-free positive-int floor
+    division (Python ``//`` == SQL DIV for non-negative operands), and
+    round 1 folds the
     constant h0 into a degree aggregate — SUM(h0) over a supplier's
     customers IS SCALE x degree, so the first half-round needs no
     join.  Deployment caveat: rank tables here are broadcast-sized BY
@@ -530,36 +511,19 @@ def hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference has no iterative operators (SURVEY §2c extension).
     """
-    from kbrowse_spark.functions.cache_registry import cached
-
-    def build_pairs():
-        o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-        li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-        return (
-            o.join(li, o["o_orderkey"] == li["l_orderkey"])
-            .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-            .distinct()
-        )
-
-    # Two cached copies of the edge list, pre-partitioned by each
-    # side's key (r14): alternate half-rounds aggregate by s then by c,
-    # so each copy's partitioning satisfies its aggregate's required
+    # Two cached copies of the trading pairs, pre-partitioned by each
+    # side's key: alternate half-rounds aggregate by s then by c, so
+    # each copy's partitioning satisfies its aggregate's required
     # distribution — every half-round is a single-stage job with no
-    # exchange.  by_c derives from the cached by_s so the join+distinct
-    # builds once.  The duplicate cache is edge-sized x2 — the standard
+    # exchange.  The duplicate cache is edge-sized x2 — the standard
     # both-sides layout for bipartite iteration.
+    pairs = _trading_pairs(spark, sf_dir)
     par = spark.sparkContext.defaultParallelism
     by_s = cached(
-        spark,
-        sf_dir,
-        "hits_pairs_by_s",
-        lambda: build_pairs().repartition(par, "s"),
+        spark, sf_dir, "hits_pairs_by_s", lambda: pairs.repartition(par, "s")
     )
     by_c = cached(
-        spark,
-        sf_dir,
-        "hits_pairs_by_c",
-        lambda: by_s.repartition(par, "c"),
+        spark, sf_dir, "hits_pairs_by_c", lambda: pairs.repartition(par, "c")
     )
 
     # One ACTION per iteration: the supplier half-round and its
@@ -589,7 +553,7 @@ def hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("a"),
         )
 
-    # Driver transfers ride Arrow (r14): collect()/createDataFrame(list)
+    # Driver transfers ride Arrow: collect()/createDataFrame(list)
     # move the ~15k-row customer rank table through the pickled-row path
     # — measured 0.4-1.0 s per iteration collect on rows that transfer
     # in ~ms as Arrow batches (guide §6 "Arrow for driver transfers").
@@ -641,30 +605,6 @@ hits_hubs_authorities.__doc__ = hits_hubs_authorities.__doc__.format(
 
 _KCORE_K = 8
 _KCORE_ROUNDS = 6
-# Lineage-truncation strategy per iterative round (shared by EVERY
-# loop-built graph operator that cuts lineage: k-core peeling AND
-# multi-source BFS).  False (default, right for local[]/bench): EAGER
-# localCheckpoint — blocks live on executor local store, zero HDFS
-# traffic.  True (right for a real cluster): reliable .checkpoint()
-# to the fault-tolerant checkpoint dir, so an executor loss mid-round
-# recomputes from the checkpoint instead of killing the query
-# (localCheckpoint blocks are executor-local and UNRECOVERABLE —
-# truncated lineage means no recomputation path).
-_GRAPH_RELIABLE_CHECKPOINT = False
-
-
-def _truncate_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
-    """One iterative round's lineage cut, honoring the deployment knob.
-
-    ``eager=False`` returns the checkpoint-marked frame WITHOUT running
-    a job; the caller's next action (e.g. the convergence count)
-    materializes it — one job per round instead of two (r14)."""
-    if _GRAPH_RELIABLE_CHECKPOINT:
-        sc = df.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
-            sc.setCheckpointDir("/tmp/kbrowse_spark_checkpoints")
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
 
 
 def _kcore_oracle() -> str:
@@ -714,7 +654,7 @@ def kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the output IS the k-core, not an artifact of the round count).
     Per round: two map-side-combinable degree aggregates + two
     broadcast-able semi-joins on the shrinking edge list.  Each round
-    ends with an EAGER localCheckpoint — not .cache(): every round
+    ends with a localCheckpoint — not .cache(): every round
     references the edge list THREE times (edges + both degree
     filters), so a cache-only loop grows the LOGICAL tree 3x per
     round and the 3^{r}-leaf plan string OOMs a default-heap driver
@@ -727,12 +667,9 @@ def kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fault-tolerance delta at cluster scale: localCheckpoint blocks
     are EXECUTOR-LOCAL and unrecoverable — truncated lineage means an
     executor loss mid-peel has no recomputation path and kills the
-    query.  Right for local[]/bench (zero distributed-FS traffic);
-    on a real cluster set _GRAPH_RELIABLE_CHECKPOINT=True to use
-    reliable .checkpoint() to the fault-tolerant checkpoint dir
-    (or periodically write the shrinking edge list to parquet), the
-    same deployment-delta pattern dedup_span_removal documents for
-    its harness ORDER BY.
+    query.  Right for local[]/bench (zero distributed-FS traffic); a
+    recoverable policy for a real cluster would have to cover every
+    lineage cut in the engine, not this loop alone.
 
     Scale posture: edges shuffle on their own keys only; node-grain
     degree tables are the only aggregates; nothing is driver-side
@@ -742,18 +679,7 @@ def kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference has no graph operators (SURVEY §2c extension).
     """
-    from kbrowse_spark.functions.cache_registry import cached
-
-    def build_edges():
-        o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-        li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-        return (
-            o.join(li, o["o_orderkey"] == li["l_orderkey"])
-            .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-            .distinct()
-        )
-
-    edges = cached(spark, sf_dir, "kcore_edges_r0", build_edges)
+    edges = _trading_pairs(spark, sf_dir)
     # Early exit on convergence: peeling only ever REMOVES edges, so an
     # unchanged count  <=>  no node fell below k  <=>  fixpoint — and
     # extra rounds past the fixpoint are no-ops, so stopping early is
@@ -762,21 +688,17 @@ def kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_prev = edges.count()
     for _ in range(_KCORE_ROUNDS):
         # Node-grain keep lists ship as broadcast LEFT SEMI joins
-        # (keys only — keep_c holds distinct c, so semi == the former
-        # inner join): the checkpointed edge list carries no size
-        # stats, and without the hint the planner sort-merge-joined
-        # the full edge relation per filter (r14).  Node tables are
-        # orders of magnitude below edge grain; a deployment where
-        # even node grain outgrows executor memory flips the edge
-        # list to by-key bucketing instead (the module's
-        # _GRAPH_RELIABLE_CHECKPOINT deployment-knob pattern).
-        # BOTH degree tables from ONE pass over the round's edges (r15,
-        # guide §2.4): the two per-key aggregates each re-scanned the
-        # checkpointed edge blocks as separate broadcast-build jobs; a
+        # (keys only — keep_c holds distinct c): the checkpointed edge
+        # list carries no size stats, and without the hint the planner
+        # sort-merge-joins the full edge relation per filter.  Node
+        # tables are orders of magnitude below edge grain; where even
+        # node grain outgrows executor memory the edge list needs
+        # by-key bucketing instead.
+        # BOTH degree tables from ONE pass over the round's edges: a
         # 2x explode to (kind, id) rows feeds one map-side-combinable
         # aggregate (node-grain before the exchange), the keep table
         # checkpoints lazily, and the second broadcast build reads its
-        # blocks instead of re-aggregating.
+        # blocks instead of re-scanning the edges and re-aggregating.
         keep = (
             edges.select(
                 F.explode(
@@ -804,12 +726,12 @@ def kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # Lazy lineage cut: the convergence count is the action that
         # materializes the round — one job per round, not a separate
-        # eager-checkpoint job plus a count over its blocks (r14).
-        edges = _truncate_lineage(
+        # eager-checkpoint job plus a count over its blocks.
+        edges = (
             edges.join(keep_c, "c", "left_semi")
             .join(keep_s, "s", "left_semi")
-            .select("c", "s"),
-            eager=False,
+            .select("c", "s")
+            .localCheckpoint(eager=False)
         )
         n_now = edges.count()
         if n_now == n_prev:
@@ -839,17 +761,6 @@ kcore_decomposition.__doc__ = kcore_decomposition.__doc__.format(
 
 _BFS_SEEDS = 3  # smallest interacting custkeys
 _BFS_H = 4  # hop bound
-# Frontier/visited tables are seed-bounded (<= seeds x nodes rows of
-# (long, short string, long)) — orders of magnitude smaller than the
-# edge list.  Broadcasting them turns every per-round join into a
-# single pass over the CACHED edge partitions (no 1.17M-row edge
-# shuffle + sort per round: measured 4.4 s -> ~2 s at sf0.1).  That is
-# the right plan whenever the frontier fits an executor (the common
-# BFS regime: few seeds); a deployment traversing from MILLIONS of
-# seeds flips this to False and gets the shuffle join against
-# by-src-bucketed edges instead (the kcore/_GRAPH_RELIABLE_CHECKPOINT
-# deployment-knob pattern).
-_BFS_BROADCAST_FRONTIER = True
 
 
 @register(
@@ -902,19 +813,20 @@ def bfs_multisource_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture: per round, the join volume is |frontier| x degree
     (frontier-bounded, never corpus^2) and the visited set grows
     monotonically to at most seeds x nodes.  Each round checkpoints
-    ONLY its new frontier via _truncate_lineage (eager checkpoint);
+    ONLY its new frontier (eager localCheckpoint);
     ``visited`` is the union of those disjoint per-round checkpoints,
     so total materialized bytes across the traversal are O(|visited|)
     (checkpointing the union instead re-wrote every prior round's
     rows each round: O(H * |visited|)), round h+1's frontier IS round
     h's stored blocks (nothing lazy re-executes; carrying the lazy
     ``nxt`` would cost O(H^2/2) frontier joins instead of O(H)), and
-    the anti-join probes a union of flat checkpoint scans.  Lineage
-    cuts honor the module knob _GRAPH_RELIABLE_CHECKPOINT (shared
-    with kcore_decomposition): localCheckpoint for local[]/bench,
-    reliable checkpoint() for a real cluster where executor-local
-    blocks are unrecoverable — at the cost of a dir write per round.
-    At cluster scale the visited set would be bucketed by node,
+    the anti-join probes a union of flat checkpoint scans.  The
+    frontier and visited tables are broadcast: they are seed-bounded,
+    orders of magnitude below the edge list, so every round is one
+    pass over the cached edge partitions with no edge shuffle.  A
+    traversal from millions of seeds would need the shuffle join
+    against by-src-bucketed edges instead, and at cluster scale the
+    visited set would be bucketed by node,
     making the anti-join co-partitioned.
 
     Reference has no graph operators (SURVEY §2c extension;
@@ -922,16 +834,11 @@ def bfs_multisource_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     traversal).
     """
     edges = _lpa_edges(spark, sf_dir)
-    # Seeds from the CACHED edge list (r14): the c-node set of the
-    # symmetrized graph IS "customers with >= 1 lineitem via orders"
-    # (every edge comes from a distinct (custkey, suppkey) trading
-    # pair), so the smallest {_BFS_SEEDS} interacting custkeys can be
-    # read off the warm cache instead of re-scanning orders ⋈ lineitem
-    # per invocation — two fewer corpus scans per run, same seed set
-    # by construction.
+    # The smallest interacting custkeys, read off the cached trading
+    # pairs rather than a fresh orders ⋈ lineitem scan.
     seeds = (
-        edges.filter(F.col("src").startswith("c"))
-        .select(F.expr("CAST(substring(src, 2) AS BIGINT)").alias("seed"))
+        _trading_pairs(spark, sf_dir)
+        .select(F.col("c").alias("seed"))
         .distinct()
         .orderBy("seed")
         .limit(_BFS_SEEDS)
@@ -941,31 +848,31 @@ def bfs_multisource_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # Checkpoint ONLY each round's new frontier, never the whole
-    # visited set (r14): `visited` is the union of the per-round
+    # visited set: `visited` is the union of the per-round
     # checkpointed frontiers (disjoint by the anti-join), so the
     # total bytes materialized across the traversal is O(|visited|)
     # instead of the O(H * |visited|) the checkpoint-the-union form
-    # paid (each round re-wrote every prior round's rows).  Lineage
+    # pays (each round re-writing every prior round's rows).  Lineage
     # stays O(1) per round — every leaf of `visited` is a flat
     # checkpoint scan — and round h+1's frontier IS round h's stored
     # blocks, so nothing lazy is ever re-executed.
-    frontier = _truncate_lineage(
-        seeds.select("seed", "node", F.lit(0).cast("long").alias("hop"))
-    )
+    frontier = seeds.select(
+        "seed", "node", F.lit(0).cast("long").alias("hop")
+    ).localCheckpoint()
     visited = frontier
-    hint = F.broadcast if _BFS_BROADCAST_FRONTIER else (lambda df: df)
     for h in range(1, _BFS_H + 1):
-        frontier = _truncate_lineage(
-            hint(frontier)
+        frontier = (
+            F.broadcast(frontier)
             .join(edges, frontier["node"] == edges["src"])
             .select("seed", F.col("dst").alias("node"))
             .distinct()
             .join(
-                hint(visited.select("seed", "node")),
+                F.broadcast(visited.select("seed", "node")),
                 ["seed", "node"],
                 "left_anti",
             )
             .withColumn("hop", F.lit(h).cast("long"))
+            .localCheckpoint()
         )
         visited = visited.unionByName(frontier)
     return (
@@ -1061,17 +968,15 @@ def graph_modularity_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality scalar for lpa_communities, as eval_auc_rank is for the
     classifiers).
     """
-    # r14 plan-shape fix (guide §2.4): the lazy 2-round LPA chain fed
-    # FOUR consumers (x, y, dsq, nc) and Catalyst planned each with its
-    # own copy — 64 parquet scans / 138 Exchanges / 22 SortMergeJoins
-    # in the before plan (plans/r14/graph_modularity_lpa_before.txt).
+    # The lazy 2-round LPA chain feeds FOUR consumers (x, y, dsq, nc),
+    # and Catalyst would plan each with its own copy of the chain.
     # One lazy localCheckpoint shares a single materialization, and the
     # node-grain label table (|customers|+|suppliers| rows, NOT
     # edge-grain) is broadcast at its three join sites so the cached
     # edge list is never re-shuffled — the pagerank/kcore posture; at a
     # scale where node tables outgrow broadcast, drop the hints and
     # these become the LPA rounds' own src-keyed shuffles.
-    labels = _truncate_lineage(_lpa_labels(spark, sf_dir), eager=False)
+    labels = _lpa_labels(spark, sf_dir).localCheckpoint(eager=False)
     edges = _lpa_edges(spark, sf_dir)
     deg = edges.groupBy("src").agg(
         F.count(F.lit(1)).cast("long").alias("d")

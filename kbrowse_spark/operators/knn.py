@@ -1944,11 +1944,10 @@ def eval_mrr_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     (broadcast-scored, WindowGroupLimit top-k).
     """
     topk = _rag_topk(spark, sf_dir)
-    # Materialize the labeling pass ONCE (r14, guide §2.4): the
-    # relevance table feeds both the corpus-wide n_rel count and the
-    # top-k join below, and Catalyst planned each branch with its own
-    # copy of the full corpus-window labeling subtree (both visible in
-    # plans/r14/eval_mrr_ndcg_at_k_before.txt).  Chunk-grain and
+    # Materialize the labeling pass ONCE: the relevance table feeds
+    # both the corpus-wide n_rel count and the top-k join below, and
+    # Catalyst would plan each branch with its own copy of the full
+    # corpus-window labeling subtree.  Chunk-grain and
     # bigram-bounded (chunks containing one of the 9 query bigrams),
     # so the checkpointed block is small; the explicit broadcast on
     # the join below is needed because a checkpointed RDD carries no
@@ -2728,14 +2727,11 @@ def dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     density clustering).
     """
     from kbrowse_spark.operators.dedup import _cc_star_labels
-    from kbrowse_spark.operators.graph import _truncate_lineage
 
     emb = load(spark, sf_dir, "embeddings")
-    # r14 plan-shape fix (guide §2.4): the grid-join subtree fed nb
-    # (twice, via the union), ce, and bord, and every appearance ALSO
-    # paid _spatial_pairs' readout orderBy as a range exchange + global
-    # sort — 82 parquet scans / 172 Exchanges in the before plan
-    # (plans/r14/dbscan_grid_clusters_before.txt).  One checkpointed
+    # The grid-join subtree feeds nb (twice, via the union), ce, and
+    # bord, and Catalyst would plan every appearance with its own copy
+    # of the grid join.  One checkpointed
     # materialization of the unordered candidate pairs (candidate
     # volume is cell-occupancy-bounded, the operator's own scale
     # contract) + checkpoints at the other fan-out nodes (core, clab,
@@ -2743,11 +2739,10 @@ def dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tables (core, clab) are broadcast at their join sites — the
     # kcore/cc_star posture: checkpointed frames carry no stats, so
     # the planner would otherwise sort-merge every one of these joins.
-    pairs = _truncate_lineage(
-        _spatial_pairs_unordered(spark, sf_dir, _DB_EPS).select(
-            "vec_a", "vec_b"
-        ),
-        eager=False,
+    pairs = (
+        _spatial_pairs_unordered(spark, sf_dir, _DB_EPS)
+        .select("vec_a", "vec_b")
+        .localCheckpoint(eager=False)
     )
     nb = pairs.unionByName(
         pairs.select(
@@ -2755,11 +2750,10 @@ def dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     deg = nb.groupBy("vec_a").agg(F.count(F.lit(1)).alias("cnt"))
-    core = _truncate_lineage(
-        deg.filter(F.col("cnt") + 1 >= _DB_MINPTS).select(
-            F.col("vec_a").alias("vec_id")
-        ),
-        eager=False,
+    core = (
+        deg.filter(F.col("cnt") + 1 >= _DB_MINPTS)
+        .select(F.col("vec_a").alias("vec_id"))
+        .localCheckpoint(eager=False)
     )
     ce = (
         pairs.join(
@@ -2781,15 +2775,15 @@ def dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         F.col("vec_id").alias("node"), F.col("vec_id").alias("cluster_id")
     )
-    clab = _truncate_lineage(labels.unionByName(singles), eager=False)
-    bord = _truncate_lineage(
+    clab = labels.unionByName(singles).localCheckpoint(eager=False)
+    bord = (
         nb.join(
             F.broadcast(core), nb["vec_a"] == core["vec_id"], "left_anti"
         )
         .join(F.broadcast(clab), nb["vec_b"] == clab["node"])
         .groupBy("vec_a")
-        .agg(F.min("cluster_id").alias("cid")),
-        eager=False,
+        .agg(F.min("cluster_id").alias("cid"))
+        .localCheckpoint(eager=False)
     )
     corec = clab.groupBy(F.col("cluster_id").alias("cid")).agg(
         F.count(F.lit(1)).cast("long").alias("n_core")

@@ -1096,17 +1096,16 @@ def linkage_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("is_match").alias("is_match"),
         F.expr("bit_or(shiftleft(1, pass))").alias("pmask"),
     )
-    # Materialize the pair table ONCE (r14): the per-pass and combined
+    # Materialize the pair table ONCE: the per-pass and combined
     # readouts below are separate plan branches, and Catalyst plans
     # each with its own copy of the candidate subtree (scan + 4-pass
-    # explode + lead window + levenshtein + pair collapse — both
-    # copies visible in plans/r14/..._before.txt); their
+    # explode + lead window + levenshtein + pair collapse); their
     # aggregates differ (the combined branch drops the pass set), so
     # ReuseExchange cannot dedupe them.  A lazy localCheckpoint turns
     # `pairs` into one shared RDD both branches read — the candidate
     # pipeline runs exactly once.  Pair-grain (w*n-bounded) blocks;
-    # executor-local and unrecoverable, the same local[]/bench posture
-    # as the graph operators' _GRAPH_RELIABLE_CHECKPOINT=False arm.
+    # executor-local and unrecoverable, like every lineage cut in the
+    # engine.
     pairs = pairs.localCheckpoint(eager=False)
 
     def _stats():

@@ -6,7 +6,9 @@ pioneer-protocol array (`sinks/pioneer.py`) chunk by chunk: the rows of
 ``pioneer.emit_json_array`` for a batch scan, or those of follow mode's
 ``foreachBatch`` emitter (`streaming/follow.py`) for a stream.  The
 caller only writes the chunks out: the HTTP handler streams them as the
-response body, the CLI prints them.
+response body, the CLI prints them.  With ``output_parquet`` a bounded
+search writes its rows to that path instead and yields only
+``{"written": path}``.
 
 The wall-clock kill switch (O10, `search.clj:117-121`) covers every
 search: after ``stop_after_seconds`` (86400 s when unset) a batch scan's
@@ -17,11 +19,13 @@ the search through the same cancel.
 Error contract (Q8): ``QuerySpecError`` is raised before the first
 chunk, so callers can still answer 400 / exit 2.  Any other failure,
 while planning or mid-scan, ends the array with ``{"error": msg}`` and
-``]``, and is then re-raised.
+``]`` (a parquet write has no array: it yields nothing more), and is
+then re-raised.
 """
 
 from __future__ import annotations
 
+import json
 import queue
 import threading
 import uuid
@@ -43,18 +47,32 @@ _FOLLOW_BACKLOG = 1000
 
 
 def run_search(
-    spark: SparkSession, spec: QuerySpec, pretty: bool = False
+    spark: SparkSession,
+    spec: QuerySpec,
+    pretty: bool = False,
+    output_parquet: str | None = None,
 ) -> Iterator[str]:
     """Run ``spec`` and yield the pioneer-protocol array, ``[`` and the
-    pioneer first and ``]`` last.  Closing the generator cancels the
-    search."""
+    pioneer first and ``]`` last, or, for a bounded search with
+    ``output_parquet``, write the rows there.  Closing the generator
+    cancels the search."""
+    framed = output_parquet is None
     try:
         scan = planner.build_scan(spark, spec)
-        chunks, cancel = (_follow if spec.follow else _batch)(scan, pretty)
+        if spec.follow:
+            chunks, cancel = _follow(scan, pretty)
+        else:
+            cancel = _job_group(spark)
+            chunks = (
+                pioneer.emit_json_array(scan, pretty)
+                if framed
+                else _write_parquet(scan, output_parquet)
+            )
     except QuerySpecError:
         raise
     except Exception as e:
-        yield pioneer.open_array(pretty) + pioneer.close_array(e)
+        if framed:
+            yield pioneer.open_array(pretty) + pioneer.close_array(e)
         raise
     deadline = spec.stop_after_seconds
     timer = threading.Timer(
@@ -63,29 +81,35 @@ def run_search(
     timer.daemon = True
     timer.start()
     try:
-        # Both chunk sources yield the opening '[' + pioneer first.
+        # An array's chunk sources yield the opening '[' + pioneer first.
         for chunk in chunks:
             yield chunk
     except GeneratorExit:  # the consumer went away
         cancel()
         raise
     except Exception as e:
-        yield pioneer.close_array(e)
+        if framed:
+            yield pioneer.close_array(e)
         raise
     finally:
         timer.cancel()
         chunks.close()
 
 
-def _batch(
-    df: DataFrame, pretty: bool
-) -> tuple[Iterator[str], Callable[[], None]]:
-    """A batch scan's chunks, and the cancel of its job group.  The
-    group is set on the consuming thread, which runs the scan's jobs."""
-    sc = df.sparkSession.sparkContext
+def _job_group(spark: SparkSession) -> Callable[[], None]:
+    """Put the calling thread's jobs in a new job group and return its
+    cancel.  A batch scan's jobs run on the consuming thread."""
+    sc = spark.sparkContext
     group = f"kbrowse-search-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "kbrowse search", True)
-    return pioneer.emit_json_array(df, pretty), lambda: sc.cancelJobGroup(group)
+    return lambda: sc.cancelJobGroup(group)
+
+
+def _write_parquet(df: DataFrame, path: str) -> Iterator[str]:
+    """Write the scan's rows to ``path``: a distributed write, no rows
+    on the driver."""
+    df.write.mode("overwrite").parquet(path)
+    yield json.dumps({"written": path})
 
 
 def _follow(

@@ -2540,28 +2540,6 @@ def test_kcore_reaches_true_fixpoint(spark, sf_dir):
         assert d >= _KCORE_K
 
 
-def test_kcore_reliable_checkpoint_knob(spark, sf_dir):
-    """_GRAPH_RELIABLE_CHECKPOINT=True swaps the per-round lineage cut
-    from executor-local localCheckpoint to reliable .checkpoint() (the
-    cluster fault-tolerance posture the docstring names); results must
-    be IDENTICAL — the knob changes recovery semantics, never values."""
-    from kbrowse_spark.operators import graph as G
-
-    base = [
-        tuple(r) for r in _q(spark, sf_dir, "kcore_decomposition").collect()
-    ]
-    old = G._GRAPH_RELIABLE_CHECKPOINT
-    G._GRAPH_RELIABLE_CHECKPOINT = True
-    try:
-        reliable = [
-            tuple(r)
-            for r in _q(spark, sf_dir, "kcore_decomposition").collect()
-        ]
-    finally:
-        G._GRAPH_RELIABLE_CHECKPOINT = old
-    assert reliable == base
-
-
 def test_wavelet_synopsis_matches_python_reference(spark, sf_dir):
     """Full independent reimplementation of the Haar synopsis in plain
     Python from the raw leaf table: tree build, |d|-ranked top-B
@@ -2892,28 +2870,6 @@ def test_bfs_equals_python_bfs(spark, sf_dir):
     assert got == truth
     assert all(c == 1 for _, h, c in got if h == 0)
     assert len({s for s, _, _ in got}) == _BFS_SEEDS
-
-
-def test_bfs_reliable_checkpoint_knob(spark, sf_dir):
-    """_GRAPH_RELIABLE_CHECKPOINT=True must reach BFS's per-round
-    lineage cuts too (they route through _truncate_lineage, the same
-    knob kcore honors) — flipping the knob changes recovery semantics
-    only, never values."""
-    from kbrowse_spark.operators import graph as G
-
-    base = [
-        tuple(r) for r in _q(spark, sf_dir, "bfs_multisource_hops").collect()
-    ]
-    old = G._GRAPH_RELIABLE_CHECKPOINT
-    G._GRAPH_RELIABLE_CHECKPOINT = True
-    try:
-        reliable = [
-            tuple(r)
-            for r in _q(spark, sf_dir, "bfs_multisource_hops").collect()
-        ]
-    finally:
-        G._GRAPH_RELIABLE_CHECKPOINT = old
-    assert reliable == base
 
 
 def test_hard_negatives_disjoint_and_exact(spark, sf_dir):

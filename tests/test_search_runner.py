@@ -1,6 +1,7 @@
 """The one search runner (kbrowse_spark/search.py) behind /search and
 the CLI: a consumer that goes away stops its search, and every failure,
-a corrupt source or a passed deadline, ends with a closed array."""
+a corrupt source or a passed deadline, ends with a closed array (or,
+for ``--output-parquet``, an error on stderr)."""
 
 from __future__ import annotations
 
@@ -22,15 +23,16 @@ def topic_a_path(spark, tmp_path_factory):
 
 @pytest.fixture
 def cli(spark, monkeypatch, capsys):
-    """Run the CLI on the test session: (exit code, stdout)."""
+    """Run the CLI on the test session: (exit code, stdout, stderr)."""
     from kbrowse_spark import cli as cli_module
     from kbrowse_spark import session
 
     monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
 
-    def run(*argv: str) -> tuple[int, str]:
+    def run(*argv: str) -> tuple[int, str, str]:
         code = cli_module.main(list(argv))
-        return code, capsys.readouterr().out
+        captured = capsys.readouterr()
+        return code, captured.out, captured.err
 
     return run
 
@@ -65,22 +67,40 @@ def test_follow_client_close_stops_stream(spark, topic_a_path):
     assert not ours()
 
 
+def _error_only(err: str) -> None:
+    """stderr is one {"error": ...} line, with no Python traceback."""
+    assert "Traceback" not in err
+    (line,) = err.strip().splitlines()
+    assert list(json.loads(line)) == ["error"]
+
+
 def test_cli_bounded_failure_closes_array(tmp_path, cli):
     """A bounded CLI search over a corrupt file prints the closed
     [pioneer, {"error": ...}] array on stdout and exits 1, as /search
-    and CLI follow do."""
+    and CLI follow do; with --output-parquet it exits 1 with only the
+    error, on stderr."""
     d = tmp_path / "corrupt"
     d.mkdir()
     (d / "x.parquet").write_bytes(b"not a parquet file" * 8)
-    code, out = cli("--source-parquet", str(d))
+    code, out, _ = cli("--source-parquet", str(d))
     assert code == 1
     _closed_with_error(out)
 
+    code, out, err = cli(
+        "--source-parquet", str(d), "--output-parquet", str(tmp_path / "out")
+    )
+    assert code == 1
+    assert "written" not in out
+    _error_only(err)
 
-def test_bounded_deadline_closes_array(spark, topic_a_path, monkeypatch, cli):
+
+def test_bounded_deadline_closes_array(
+    spark, topic_a_path, tmp_path, monkeypatch, cli
+):
     """A bounded search whose deadline passes mid-scan (a slow decode
     stands in for a huge topic) is cancelled and ends with a closed
-    array carrying the error, over /search and from the CLI."""
+    array carrying the error, over /search and from the CLI, and an
+    --output-parquet write is cancelled the same way."""
     from pyspark.sql import functions as F
 
     from kbrowse_spark.plans import planner
@@ -106,10 +126,31 @@ def test_bounded_deadline_closes_array(spark, topic_a_path, monkeypatch, cli):
     assert c.get(f"/cached?{qs}").status_code == 404
 
     t0 = time.monotonic()
-    code, out = cli(
+    code, out, _ = cli(
         "--source-parquet", topic_a_path, "--topics", "topic-a",
         "--stop-after-seconds", "1",
     )
     assert code == 1
     _closed_with_error(out)
     assert time.monotonic() - t0 < 8
+
+    t0 = time.monotonic()
+    code, out, err = cli(
+        "--source-parquet", topic_a_path, "--topics", "topic-a",
+        "--stop-after-seconds", "1", "--output-parquet", str(tmp_path / "out"),
+    )
+    assert code == 1
+    assert "written" not in out
+    _error_only(err)
+    assert time.monotonic() - t0 < 8
+
+
+def test_cli_parquet_with_follow_is_invalid(cli):
+    """--output-parquet cannot follow: exit 2 before any search runs."""
+    code, out, err = cli(
+        "--source-parquet", "unused", "--follow", "--output-parquet", "unused",
+        "--stop-after-seconds", "5",
+    )
+    assert code == 2
+    assert out == ""
+    _error_only(err)

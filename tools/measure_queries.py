@@ -1,7 +1,7 @@
 """Per-query measurement harness for optimization rounds.
 
 Usage:
-    python tools/measure_queries.py [--plans-dir plans/r14 --tag before]
+    python tools/measure_queries.py [--plans-dir DIR --tag before]
         [--runs 3] [--sf-dir /root/testdata/sf0.1] name [name ...]
 
 For each named catalog query: optional .explain("formatted") capture to
