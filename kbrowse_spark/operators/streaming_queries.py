@@ -20,71 +20,42 @@ from __future__ import annotations
 
 import itertools
 import threading
+import time
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from kbrowse_spark.catalog import register
 from kbrowse_spark.functions.determinism import dsum, sql_dsum
-from kbrowse_spark.sources.tables import table_path
+from kbrowse_spark.sources.fixture import stage_stream_dir
+from kbrowse_spark.sources.tables import load_stream, table_path
 
 _counter = itertools.count()
 
-# Serializes the session-wide shuffle-partition set/run/restore window in
-# _run_to_memory (see its docstring for why).
+# Shuffle, and so state, partitions of every bounded run here.  Stateful
+# cost on these replays is dominated by per-partition state-store commit
+# file I/O, not data volume (profiled: 32 partitions -> ~1.9 s/batch,
+# 8 -> ~1.1 s for the same 100k rows), and the runs use throwaway
+# checkpoints, so a small count fits.  A production stream must size its
+# own: the count is frozen into the checkpoint for the life of the
+# query, so size it to peak state (e.g. 2-3x cores).
+#
+# The bucketed stateful operators use one state-key bucket per state
+# partition, the fewest that still use every state store; each extra
+# bucket per partition only adds Python invocations per trigger
+# (measured at sf0.1, min-of-3 same session: sessionizer 2.85 s at 64
+# buckets -> 2.17 s at 8; transition counts 1.34 -> 1.08; user totals
+# 1.35 -> 1.09).  Results are bucket-invariant by construction (the
+# oracle pins them); per-bucket state rows grow with users per bucket.
+STREAM_STATE_PARTITIONS = 8
+
+# spark.sql.shuffle.partitions is SESSION-wide: without a lock, two
+# concurrent bounded runs (the service serves queries concurrently)
+# could interleave set/restore so a batch query runs with the stream's
+# count or one run's restore clobbers the other's.  The lock serializes
+# only _run_bounded's set -> run -> restore -> record window.
 _SHUFFLE_CONF_LOCK = threading.Lock()
-
-
-def _stage_stream_dir(path: str) -> str:
-    """The file-stream source needs a *directory*; the fixtures are
-    single parquet files.  Stage a per-file symlink dir under /tmp
-    (idempotent, content-addressed by source path)."""
-    import hashlib
-    import os
-
-    d = os.path.join(
-        "/tmp/kbrowse_stream_src", hashlib.md5(path.encode()).hexdigest()[:12]
-    )
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, os.path.basename(path))
-    if not os.path.exists(link):
-        try:
-            os.symlink(path, link)
-        except OSError:
-            import shutil
-
-            shutil.copyfile(path, link)
-    return d
-
-
-def _normalize_stream_ts(stream: DataFrame, static: DataFrame) -> DataFrame:
-    """Normalize the events ``ts`` column to TIMESTAMP (with local tz),
-    whatever physical type the fixture parquet stored:
-
-    * TIMESTAMP(NANOS) surfaces as bigint (nanosAsLong) -> truncate to
-      micros exactly like DuckDB/Arrow do;
-    * plain ``timestamp[us]`` surfaces as TIMESTAMP_NTZ -> cast to
-      TIMESTAMP, interpreting the wall clock in the session time zone.
-      Watermarks/event-time ops require TIMESTAMP, and downstream
-      formatting renders back in session tz, so wall-clock values match
-      the oracle for ANY session time zone.
-    """
-    dt = dict(static.dtypes).get("ts")
-    if dt == "bigint":
-        return stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if dt == "timestamp_ntz":
-        return stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
-
-
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the events parquet with the same ts handling as
-    the batch loader (TIMESTAMP(NANOS) -> long -> micros)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = table_path(sf_dir, "events")
-    static = spark.read.parquet(path)
-    stream = spark.readStream.schema(static.schema).parquet(_stage_stream_dir(path))
-    return _normalize_stream_ts(stream, static)
 
 
 # Executed micro-batch physical plans, captured for the plan-smell
@@ -103,18 +74,26 @@ def _record_stream_plan(q, label: str) -> None:
         pass
 
 
-# Machinery-vs-operator split per bounded run, for the bench notes
-# (VERDICT r11 #1): a bounded availableNow replay pays a fixed
-# micro-batch spin-up (query start/stop, offset log + WAL commits,
-# source listing, state-store commit files) that has nothing to do
-# with the operator under test.  recentProgress exposes the split:
-# ``addBatch`` durationMs is the actual plan execution (operator +
-# sink); wall minus the addBatch total is scaffolding.  Audit aid
-# only: small dicts, best-effort, never fails a query.
+# Machinery-vs-operator split per bounded run, for the bench notes: a
+# bounded availableNow replay pays a fixed micro-batch spin-up (query
+# start/stop, offset log + WAL commits, source listing, state-store
+# commit files) that has nothing to do with the operator under test.
+# recentProgress exposes the split: ``addBatch`` durationMs is the
+# actual plan execution (operator + sink); wall minus the addBatch total
+# is scaffolding.  Audit aid only: small dicts, best-effort, never fails
+# a query.
 _STREAM_RUN_STATS: dict[str, dict] = {}
 
 
-def _record_stream_stats(q, label: str, wall_s: float) -> None:
+def _record_stream_stats(q, label: str, wall_s: float) -> str:
+    """Record one run's split and return its key.  Keys are UNIQUE per
+    run: a builder that runs two bounded queries (or one that's re-run)
+    gets label, label#2, … — so the profiler's before/after diff sums
+    real entries instead of one overwritten record."""
+    key, i = label, 1
+    while key in _STREAM_RUN_STATS:
+        i += 1
+        key = f"{label}#{i}"
     try:
         import json as _json
 
@@ -129,14 +108,6 @@ def _record_stream_stats(q, label: str, wall_s: float) -> None:
             int(p.get("durationMs", {}).get("triggerExecution", 0))
             for p in progs
         )
-        # Keys are UNIQUE per run: a builder that runs two bounded
-        # queries (or one that's re-run) gets label, label#2, … — so
-        # the profiler's before/after diff sums real entries instead
-        # of one overwritten record (ADVICE r12).
-        key, i = label, 1
-        while key in _STREAM_RUN_STATS:
-            i += 1
-            key = f"{label}#{i}"
         _STREAM_RUN_STATS[key] = {
             "wall_ms": round(wall_s * 1000, 1),
             "operator_ms": add_batch_ms,
@@ -146,6 +117,7 @@ def _record_stream_stats(q, label: str, wall_s: float) -> None:
         }
     except Exception:  # noqa: BLE001
         pass
+    return key
 
 
 def stream_run_stats() -> dict[str, dict]:
@@ -154,62 +126,89 @@ def stream_run_stats() -> dict[str, dict]:
 
 
 def executed_stream_plans() -> dict[str, str]:
-    """Snapshot of captured micro-batch plans (label -> plan)."""
+    """Snapshot of captured micro-batch plans (run key -> plan)."""
     return dict(_EXECUTED_STREAM_PLANS)
 
 
-def _run_to_memory(df: DataFrame, mode: str, label: str | None = None) -> DataFrame:
-    """Run a bounded stream (availableNow) into a memory sink and return
-    the materialized result as a batch DataFrame.
+def _run_bounded(writer: DataStreamWriter, label: str) -> None:
+    """Run a configured stream writer over all available input
+    (availableNow) with STREAM_STATE_PARTITIONS shuffle partitions, wait
+    until the query ends, and record its last micro-batch plan and its
+    machinery/operator split under ``label``.  Raises what the query
+    raised; the session's partition count is restored either way."""
+    spark = writer._spark
+    key = "spark.sql.shuffle.partitions"
+    with _SHUFFLE_CONF_LOCK:
+        saved = spark.conf.get(key)
+        try:
+            spark.conf.set(key, str(STREAM_STATE_PARTITIONS))
+            t0 = time.perf_counter()
+            q = writer.trigger(availableNow=True).start()
+            try:
+                q.awaitTermination()
+            finally:
+                q.stop()
+            wall = time.perf_counter() - t0
+        finally:
+            spark.conf.set(key, saved)
+        # Under the lock: a run's key is picked by check-then-set.
+        _record_stream_plan(q, _record_stream_stats(q, label, wall))
 
-    State partitioning: stateful-operator cost here is dominated by
-    per-partition state-store commit file I/O, not data volume (profiled
-    r6: 32 partitions -> ~1.9 s/batch, 8 -> ~1.1 s for the same 100k
-    rows — the r5 "tumbling drift" was exactly this fixed overhead).
-    These bounded replays use throwaway checkpoints, so we right-size
-    the stream's shuffle/state partitions to a small count and restore
-    the session conf afterwards.  A PRODUCTION stream must pick its own
-    number instead (state partition count is frozen into the checkpoint
-    for the life of the query — size it to peak state, e.g. 2-3x cores,
-    via KBROWSE_STREAM_STATE_PARTITIONS).
-    """
-    import os
+
+def _run_to_memory(df: DataFrame, mode: str, label: str | None = None) -> DataFrame:
+    """Run a bounded stream (:func:`_run_bounded`) into a memory sink and
+    return the result as a batch DataFrame.  The sink's temp view is
+    dropped on the way out: the returned DataFrame keeps the rows, and a
+    view would pin them on the driver for the life of the session."""
     import sys as _sys
-    import time as _time
 
     # Stats label: explicit when given; else the builder function name.
     # A wrapper between a builder and this helper should pass ``label``
-    # — the frame heuristic only sees the immediate caller (ADVICE r12).
+    # — the frame heuristic only sees the immediate caller.
     caller = label or _sys._getframe(1).f_code.co_name
 
     spark = df.sparkSession
     name = f"stream_result_{next(_counter)}"
-    key = "spark.sql.shuffle.partitions"
-    n_state = os.environ.get("KBROWSE_STREAM_STATE_PARTITIONS", "8")
-    # spark.sql.shuffle.partitions is SESSION-wide: without a lock, two
-    # concurrent bounded-stream builders (the service serves queries
-    # concurrently) could interleave set/restore so a batch query runs
-    # with 8 partitions or one stream's restore clobbers the other's.
-    # The lock serializes only the set -> run -> restore window.
-    with _SHUFFLE_CONF_LOCK:
-        saved = spark.conf.get(key)
-        try:
-            spark.conf.set(key, n_state)
-            t0 = _time.perf_counter()
-            q = (
-                df.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(mode)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            wall = _time.perf_counter() - t0
-            _record_stream_plan(q, name)
-            _record_stream_stats(q, caller, wall)
-        finally:
-            spark.conf.set(key, saved)
-    return spark.table(name)
+    try:
+        _run_bounded(
+            df.writeStream.format("memory").queryName(name).outputMode(mode),
+            caller,
+        )
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
+
+
+def _private_scratch(root: str, sf_dir: str) -> str:
+    """A new scratch directory under ``root`` private to this call
+    (``<sf_dir hash>-<pid>-<uuid>``): a fixed fixture-keyed dir would let
+    two concurrent runs (parallel pytest workers, two sessions on one
+    box) rmtree each other's in-flight checkpoints.  Because a path is
+    never reused, a killed run would leak its dir forever, so siblings
+    whose recorded pid is no longer alive are pruned first, best-effort
+    (a live pid means an in-flight concurrent run: left alone)."""
+    import hashlib
+    import os
+    import shutil
+    import uuid
+
+    try:
+        for entry in os.listdir(root):
+            parts = entry.split("-")
+            if len(parts) != 3 or not parts[1].isdigit():
+                continue
+            try:
+                os.kill(int(parts[1]), 0)  # signal 0: existence check only
+            except ProcessLookupError:
+                shutil.rmtree(os.path.join(root, entry), ignore_errors=True)
+            except PermissionError:
+                pass  # pid alive under another user: not ours to sweep
+    except OSError:
+        pass
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
+    d = f"{root}/{tag}-{os.getpid()}-{uuid.uuid4().hex[:8]}"
+    os.makedirs(d, exist_ok=True)
+    return d
 
 
 @register(
@@ -230,7 +229,7 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (availableNow): identical results to the batch GROUP BY, which is
     the point — one definition of the aggregation serves both batch
     and follow mode."""
-    ev = _events_stream(spark, sf_dir)
+    ev = load_stream(spark, sf_dir, "events")
     agg = (
         ev.groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), dsum("value").alias("sum_value"))
@@ -271,7 +270,7 @@ def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     expands each event into its 4 slide-aligned window starts
     (time_bucket - k*slide), which is exactly Spark's epoch-aligned
     window assignment."""
-    ev = _events_stream(spark, sf_dir)
+    ev = load_stream(spark, sf_dir, "events")
     agg = (
         ev.groupBy(F.window("ts", "1 hour", "15 minutes"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), dsum("value").alias("sum_value"))
@@ -299,7 +298,7 @@ def stream_dedup_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming stateful dropDuplicates on (user_id, event_type) —
     the streaming form of exact dedup. State size = number of distinct
     keys; in production bounded via dropDuplicatesWithinWatermark."""
-    ev = _events_stream(spark, sf_dir)
+    ev = load_stream(spark, sf_dir, "events")
     dedup = ev.select("user_id", "event_type").dropDuplicates(
         ["user_id", "event_type"]
     )
@@ -338,11 +337,11 @@ def stream_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stays user-grain running totals for exactly the users present in
     # the batch — identical rows to the per-user-key form.
     ev = (
-        _events_stream(spark, sf_dir)
+        load_stream(spark, sf_dir, "events")
         .select("user_id", "value")
         .withColumn(
             "bkt",
-            F.pmod(F.xxhash64(F.col("user_id")), F.lit(_session_buckets())),
+            F.pmod(F.xxhash64(F.col("user_id")), F.lit(STREAM_STATE_PARTITIONS)),
         )
     )
 
@@ -392,7 +391,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     without a second state layer."""
     from kbrowse_spark.sources.tables import load
 
-    ev = _events_stream(spark, sf_dir)
+    ev = load_stream(spark, sf_dir, "events")
     cust = F.broadcast(
         load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     )
@@ -544,7 +543,7 @@ def stream_tws_user_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    ev = _events_stream(spark, sf_dir).select("user_id", "event_type", "value")
+    ev = load_stream(spark, sf_dir, "events").select("user_id", "event_type", "value")
     prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
@@ -591,11 +590,11 @@ def _user_profile_apply_in_pandas(spark: SparkSession, sf_dir: str) -> DataFrame
     # pair, the applyInPandasWithState-expressible stand-in for the
     # MapState the TWS path uses.
     ev = (
-        _events_stream(spark, sf_dir)
+        load_stream(spark, sf_dir, "events")
         .select("user_id", "event_type", "value")
         .withColumn(
             "bkt",
-            F.pmod(F.xxhash64(F.col("user_id")), F.lit(_session_buckets())),
+            F.pmod(F.xxhash64(F.col("user_id")), F.lit(STREAM_STATE_PARTITIONS)),
         )
     )
 
@@ -621,9 +620,7 @@ def _user_profile_apply_in_pandas(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-def _events_stream_with_flush(
-    spark: SparkSession, sf_dir: str, tag: str
-) -> tuple[DataFrame, str]:
+def _events_stream_with_flush(spark: SparkSession, sf_dir: str, tag: str) -> DataFrame:
     """Events stream over a PRIVATE staged dir that also contains one
     far-future sentinel row (event_type '__flush__', ts 2024-03-01).
 
@@ -636,25 +633,15 @@ def _events_stream_with_flush(
     never appears in append output: its own window stays open.
     """
     import os
+    import shutil
 
     from pyspark.sql import Row
 
     path = table_path(sf_dir, "events")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    static = spark.read.parquet(path)
-    base = _stage_stream_dir(path)
-    d = base + "_" + tag
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, os.path.basename(path))
-    if not os.path.exists(link):
-        try:
-            os.symlink(path, link)
-        except OSError:
-            import shutil
-
-            shutil.copyfile(path, link)
-    flush = os.path.join(d, "zz_flush.parquet")
+    flush = os.path.join(stage_stream_dir(path, tag), "zz_flush.parquet")
     if not os.path.exists(flush):
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        static = spark.read.parquet(path)
         ts_is_long = dict(static.dtypes).get("ts") == "bigint"
         flush_ts = 1709251200  # 2024-03-01 00:00:00 UTC
         row = Row(
@@ -680,11 +667,8 @@ def _events_stream_with_flush(
             p for p in os.listdir(tmp) if p.endswith(".parquet")
         )
         os.replace(os.path.join(tmp, part), flush)
-        import shutil
-
         shutil.rmtree(tmp, ignore_errors=True)
-    stream = spark.readStream.schema(static.schema).parquet(d)
-    return _normalize_stream_ts(stream, static), d
+    return load_stream(spark, sf_dir, "events", tag)
 
 
 @register(
@@ -717,7 +701,7 @@ def stream_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bounded stream, so the result equals the batch two-level GROUP
     BY, which is the oracle.
     """
-    ev, _ = _events_stream_with_flush(spark, sf_dir, "chained")
+    ev = _events_stream_with_flush(spark, sf_dir, "chained")
     hourly = (
         ev.withWatermark("ts", "1 second")
         .groupBy(F.window("ts", "1 hour"), "event_type")
@@ -771,7 +755,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch self-join, which is the oracle.
     """
     views = (
-        _events_stream(spark, sf_dir)
+        load_stream(spark, sf_dir, "events")
         .filter(F.col("event_type") == "view")
         .select(
             F.col("event_id").alias("view_id"),
@@ -781,7 +765,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("v_ts", "1 second")
     )
     purchases = (
-        _events_stream(spark, sf_dir)
+        load_stream(spark, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -840,7 +824,7 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     state size is bounded by the interval × arrival rate, not by
     history.
     """
-    ev, _ = _events_stream_with_flush(spark, sf_dir, "leftjoin")
+    ev = _events_stream_with_flush(spark, sf_dir, "leftjoin")
     views = (
         ev.filter(F.col("event_type").isin("view", "__flush__"))
         .select(
@@ -850,7 +834,7 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withWatermark("v_ts", "1 second")
     )
-    ev2, _ = _events_stream_with_flush(spark, sf_dir, "leftjoin")
+    ev2 = _events_stream_with_flush(spark, sf_dir, "leftjoin")
     purchases = (
         ev2.filter(F.col("event_type").isin("purchase", "__flush__"))
         .select(
@@ -914,7 +898,7 @@ def stream_stream_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     interval x arrival rate on each side, never history.  The sentinel
     join pair (flush x flush matches itself) is filtered by user id.
     """
-    ev, _ = _events_stream_with_flush(spark, sf_dir, "fulljoin")
+    ev = _events_stream_with_flush(spark, sf_dir, "fulljoin")
     views = (
         ev.filter(F.col("event_type").isin("view", "__flush__"))
         .select(
@@ -924,7 +908,7 @@ def stream_stream_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withWatermark("v_ts", "1 second")
     )
-    ev2, _ = _events_stream_with_flush(spark, sf_dir, "fulljoin")
+    ev2 = _events_stream_with_flush(spark, sf_dir, "fulljoin")
     purchases = (
         ev2.filter(F.col("event_type").isin("purchase", "__flush__"))
         .select(
@@ -990,10 +974,10 @@ def stream_foreachbatch_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    ev = _events_stream(spark, sf_dir).select(
+    ev = load_stream(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    # Content-addressed staging (like _stage_stream_dir): repeated
+    # Content-addressed staging (like stage_stream_dir): repeated
     # invocations reuse one directory pair instead of accumulating
     # tmpdirs; stale state from a previous run is cleared up front so
     # every run exercises a fresh exactly-once cycle.
@@ -1010,19 +994,9 @@ def stream_foreachbatch_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         # failure cannot double-count.
         batch_df.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
 
-    import time as _time
-
-    t0 = _time.perf_counter()
-    q = (
-        ev.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    _record_stream_plan(q, "stream_foreachbatch_export")
-    _record_stream_stats(
-        q, "stream_foreachbatch_export", _time.perf_counter() - t0
+    _run_bounded(
+        ev.writeStream.foreachBatch(write_batch).option("checkpointLocation", ckpt),
+        "stream_foreachbatch_export",
     )
     exported = spark.read.parquet(out_dir)
     result = (
@@ -1072,7 +1046,7 @@ def stream_pyds_follow(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kbrowse_spark.sources.pyds_stream import register_events_follow_source
 
     register_events_follow_source(spark)
-    d = _stage_stream_dir(table_path(sf_dir, "events"))
+    d = stage_stream_dir(table_path(sf_dir, "events"))
     ev = spark.readStream.format("events_follow").option("path", d).load()
     agg = (
         ev.groupBy("event_type")
@@ -1086,27 +1060,6 @@ def stream_pyds_follow(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_memory(agg, "complete").orderBy("event_type")
 
 
-# State-key bucket count for the timer sessionizer: caps Python
-# invocations per trigger at this many groups regardless of user count
-# (the cogroup_asof_attribution amortization, r14).  Session logic and
-# per-session state are unchanged; see the operator docstring.
-def _session_buckets() -> int:
-    """State-key bucket count for the bucketed stateful operators —
-    DERIVED from the stream's state-partition knob instead of a
-    constant (r14): one bucket per state partition is the minimum that
-    still uses every state store, and each extra bucket per partition
-    only adds Python invocations per trigger (measured at sf0.1,
-    min-of-3 same session: sessionizer 2.85 s at 64 buckets -> 2.17 s
-    at 8; transition counts 1.34 -> 1.08; user totals 1.35 -> 1.09).
-    Production sizes KBROWSE_STREAM_STATE_PARTITIONS to peak state
-    (2-3x cores — see _run_to_memory), and the bucket count follows,
-    so parallelism scales with the deployment rather than a local[]
-    constant.  Bucket-invariant results by construction (the oracle
-    pins them); per-bucket state rows grow with users/bucket, which is
-    exactly the documented amortization-vs-row-size trade."""
-    import os
-
-    return int(os.environ.get("KBROWSE_STREAM_STATE_PARTITIONS", "8"))
 _SESSION_GAP_MS = 30 * 60 * 1000
 _SESSION_GAP_US = _SESSION_GAP_MS * 1000
 
@@ -1495,14 +1448,14 @@ def stream_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    ev, _ = _events_stream_with_flush(spark, sf_dir, "session_timeout")
+    ev = _events_stream_with_flush(spark, sf_dir, "session_timeout")
     # The state key is a bounded hash BUCKET of user_id, not the raw
     # user (r14, guide §4.3 — the cogroup_asof_attribution fix):
     # applyInPandasWithState pays a per-GROUP Python invocation (plus a
     # pandas frame per yield), and per-user groups made the fixture's
     # 1,500 users + 1,500 timer firings ~3,000 serial invocations —
     # 3.2 s of operator time that is pure Python-boundary machinery.
-    # Bucketing caps invocations at _session_buckets() per trigger; the
+    # Bucketing caps invocations at STREAM_STATE_PARTITIONS per trigger; the
     # per-user session logic below is UNCHANGED, it just runs for every
     # user of the bucket inside one invocation.  State stays per-user
     # scalars ((start, last, n) per open session), held as parallel
@@ -1518,7 +1471,7 @@ def stream_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.withWatermark("ts", "1 second")
         .select("user_id", "ts", F.unix_micros("ts").alias("ts_us"))
         .withColumn(
-            "bkt", F.pmod(F.xxhash64(F.col("user_id")), F.lit(_session_buckets()))
+            "bkt", F.pmod(F.xxhash64(F.col("user_id")), F.lit(STREAM_STATE_PARTITIONS))
         )
     )
 
@@ -1591,7 +1544,7 @@ def stream_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly once.  The flush sentinel drains end-of-stream sessions on
     the bounded run (production: the watermark does this continually).
     """
-    ev, _ = _events_stream_with_flush(spark, sf_dir, "native_session")
+    ev = _events_stream_with_flush(spark, sf_dir, "native_session")
     agg = (
         ev.withWatermark("ts", "1 second")
         .groupBy("user_id", F.session_window("ts", "30 minutes"))
@@ -1666,17 +1619,17 @@ def stream_transition_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stream_session_timeout / cogroup_asof_attribution amortization):
     # per-user keys made the fixture's ~1,500 users ~1,500 serial
     # Python invocations per trigger — pure per-GROUP Arrow round-trip
-    # machinery.  Bucketing caps invocations at _session_buckets(); the
+    # machinery.  Bucketing caps invocations at STREAM_STATE_PARTITIONS; the
     # per-user transition logic is unchanged (rows sequenced per user
     # by (ts_us, event_id), stored tail stitches across batches), and
     # per-user last-type state rides as parallel arrays on the bucket
     # row.  Emission becomes bucket-grain partial counts; the unchanged
     # downstream GROUP BY sums them — bucket-invariant by construction.
-    ev = _events_stream(spark, sf_dir).select(
+    ev = load_stream(spark, sf_dir, "events").select(
         "user_id", "event_type", "ts", F.unix_micros("ts").alias("ts_us"),
         "event_id",
     ).withColumn(
-        "bkt", F.pmod(F.xxhash64(F.col("user_id")), F.lit(_session_buckets()))
+        "bkt", F.pmod(F.xxhash64(F.col("user_id")), F.lit(STREAM_STATE_PARTITIONS))
     )
 
     trans = ev.groupBy("bkt").applyInPandasWithState(
@@ -1744,7 +1697,7 @@ def stream_foreachbatch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    ev = _events_stream(spark, sf_dir).filter(F.col("value").isNotNull())
+    ev = load_stream(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
     base = f"/tmp/kbrowse_febmerge/{tag}"
     shutil.rmtree(base, ignore_errors=True)
@@ -1789,19 +1742,11 @@ def stream_foreachbatch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         merged.write.mode("overwrite").parquet(f"{base}/v{batch_id}")
 
-    import time as _time
-
-    t0 = _time.perf_counter()
-    q = (
-        ev.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", f"{base}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    _record_stream_plan(q, "stream_foreachbatch_merge")
-    _record_stream_stats(
-        q, "stream_foreachbatch_merge", _time.perf_counter() - t0
+    _run_bounded(
+        ev.writeStream.foreachBatch(merge_batch).option(
+            "checkpointLocation", f"{base}/ckpt"
+        ),
+        "stream_foreachbatch_merge",
     )
     versions = [
         int(d[1:])
@@ -1886,7 +1831,6 @@ def stream_neardup_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     index of `materialize_minhash_index`, bucket-partitioned so each
     probe prunes to touched buckets).
     """
-    import hashlib
     import os
     import shutil
 
@@ -1903,43 +1847,12 @@ def stream_neardup_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     base_buckets = _minhash_buckets(spark, sf_dir).filter(~is_new)
     base_sizes = base_sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
 
-    path = table_path(sf_dir, "documents")
-    static = spark.read.parquet(path)
     stream = (
-        spark.readStream.schema(static.schema)
-        .parquet(_stage_stream_dir(path))
+        load_stream(spark, sf_dir, "documents")
         .filter(is_new)
         .select("doc_id", "text")
     )
-
-    # Per-invocation isolation: a fixed fixture-keyed dir would let two
-    # concurrent runs (parallel pytest workers, two sessions on one
-    # box) rmtree each other's in-flight checkpoints.  pid+uuid makes
-    # the staging dir private to this call.  Because the uuid means a
-    # path is never reused, a crashed/killed run would leak its dir
-    # forever — so on entry we best-effort prune stale sibling dirs
-    # whose recorded pid is no longer alive (a live pid means an
-    # in-flight concurrent run: left alone).
-    import uuid
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    root = "/tmp/kbrowse_neardup_alerts"
-    try:
-        for entry in os.listdir(root):
-            parts = entry.split("-")
-            if len(parts) != 3 or not parts[1].isdigit():
-                continue
-            pid = int(parts[1])
-            try:
-                os.kill(pid, 0)  # signal 0: existence check only
-            except ProcessLookupError:
-                shutil.rmtree(os.path.join(root, entry), ignore_errors=True)
-            except PermissionError:
-                pass  # pid alive under another user: not ours to sweep
-    except OSError:
-        pass
-    out_base = f"{root}/{tag}-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    os.makedirs(out_base, exist_ok=True)
+    out_base = _private_scratch("/tmp/kbrowse_neardup_alerts", sf_dir)
 
     def probe_batch(batch_df: DataFrame, batch_id: int) -> None:
         # batch-sized; reused 3x below (signatures, sizes, verify)
@@ -1988,21 +1901,11 @@ def stream_neardup_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # repeated invocations (oracle runs, tests, long sessions) cannot
     # accumulate staging dirs.
     try:
-        import time as _time
-
-        t0 = _time.perf_counter()
-        q = (
-            stream.writeStream.foreachBatch(probe_batch)
-            .trigger(availableNow=True)
-            .option(
+        _run_bounded(
+            stream.writeStream.foreachBatch(probe_batch).option(
                 "checkpointLocation", f"{out_base}/_checkpoint"
-            )
-            .start()
-        )
-        q.awaitTermination()
-        _record_stream_plan(q, "stream_neardup_alerts")
-        _record_stream_stats(
-            q, "stream_neardup_alerts", _time.perf_counter() - t0
+            ),
+            "stream_neardup_alerts",
         )
         dirs = [
             f"{out_base}/{d}"
@@ -2050,7 +1953,7 @@ def stream_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     a watermark to age closed days out; the fold runs on the aggregated
     grain only.
     """
-    ev = _events_stream(spark, sf_dir)
+    ev = load_stream(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.date_trunc("day", "ts").alias("day")
     ).agg(F.count(F.lit(1)).alias("x"))
@@ -2093,7 +1996,7 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     within the 30-day horizon — the watermark is the state-size knob;
     the downstream count is a map-side-combinable aggregate.
     """
-    ev = _events_stream(spark, sf_dir)
+    ev = load_stream(spark, sf_dir, "events")
     keyed = ev.withColumn("day", F.date_trunc("day", "ts")).select(
         "ts", "user_id", "event_type", "day"
     )
@@ -2190,33 +2093,14 @@ def stream_bloom_firstseen(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-plan) plus a {w}-row combinable aggregate; the standing state
     is one {m}-bit sketch regardless of history length.
     """
-    import hashlib
     import os
     import shutil
-    import uuid
 
     import pyarrow.parquet as pq
 
     path = table_path(sf_dir, "events")
 
-    # Per-invocation staging isolation + stale-sibling pruning (the
-    # stream_neardup_alerts rule).
-    root = "/tmp/kbrowse_bloom_stream"
-    try:
-        for entry in os.listdir(root):
-            parts = entry.split("-")
-            if len(parts) != 3 or not parts[1].isdigit():
-                continue
-            try:
-                os.kill(int(parts[1]), 0)
-            except ProcessLookupError:
-                shutil.rmtree(os.path.join(root, entry), ignore_errors=True)
-            except PermissionError:
-                pass
-    except OSError:
-        pass
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    base = f"{root}/{tag}-{os.getpid()}-{uuid.uuid4().hex[:8]}"
+    base = _private_scratch("/tmp/kbrowse_bloom_stream", sf_dir)
     src = f"{base}/src"
     out = f"{base}/out"
     os.makedirs(src, exist_ok=True)
@@ -2289,19 +2173,11 @@ def stream_bloom_firstseen(spark: SparkSession, sf_dir: str) -> DataFrame:
             bloom[int(r.w)] |= int(r.bw)
 
     try:
-        import time as _time
-
-        t0 = _time.perf_counter()
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{base}/_checkpoint")
-            .start()
-        )
-        q.awaitTermination()
-        _record_stream_plan(q, "stream_bloom_firstseen")
-        _record_stream_stats(
-            q, "stream_bloom_firstseen", _time.perf_counter() - t0
+        _run_bounded(
+            stream.writeStream.foreachBatch(process).option(
+                "checkpointLocation", f"{base}/_checkpoint"
+            ),
+            "stream_bloom_firstseen",
         )
         dirs = [
             f"{out}/{d}" for d in sorted(os.listdir(out)) if d.startswith("b")
@@ -2416,9 +2292,7 @@ def stream_spatial_epsilon_match(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(_grid_cell("y")).alias("cy"),
         )
     )
-    stream = spark.readStream.schema(static.schema).parquet(
-        _stage_stream_dir(path)
-    )
+    stream = load_stream(spark, sf_dir, "embeddings")
     probe = (
         stream.filter(F.expr("vec_id % 2 = 1"))
         .select(F.col("vec_id").alias("vec_a"), *xy)
@@ -2548,9 +2422,7 @@ def stream_dedup_static_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.expr(seg_expr).alias("seg"))
         .distinct()
     )
-    stream = spark.readStream.schema(static.schema).parquet(
-        _stage_stream_dir(path)
-    )
+    stream = load_stream(spark, sf_dir, "documents")
     probe_segs = (
         stream.filter(F.expr("doc_id % 2 = 1"))
         .select("doc_id", F.split("text", " ").alias("ws"))
@@ -2644,11 +2516,7 @@ def stream_conformal_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     model = pred.join(q, "event_type").select(
         "event_type", "p", "qhat_cents"
     )
-    path = table_path(sf_dir, "events")
-    static = spark.read.parquet(path)
-    stream = spark.readStream.schema(static.schema).parquet(
-        _stage_stream_dir(path)
-    )
+    stream = load_stream(spark, sf_dir, "events")
     scored = (
         stream.filter(F.expr("event_id % 2 = 1"))
         .select(
@@ -2749,11 +2617,7 @@ def stream_ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     asg = _assign(pts, centroids).select(
         "vec_id", F.col("q").alias("xq"), "cluster_id"
     )
-    path = table_path(sf_dir, "embeddings")
-    static = spark.read.parquet(path)
-    stream = spark.readStream.schema(static.schema).parquet(
-        _stage_stream_dir(path)
-    )
+    stream = load_stream(spark, sf_dir, "embeddings")
     qstream = stream.filter(F.col("vec_id") < _NQ).select(
         F.col("vec_id").alias("qid"),
         F.expr(
@@ -2883,11 +2747,7 @@ def stream_hotkey_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("c") * p > F.col("t"))
         .select("w", "c", "t")
     )
-    path = table_path(sf_dir, "documents")
-    static_schema = spark.read.parquet(path).schema
-    stream = spark.readStream.schema(static_schema).parquet(
-        _stage_stream_dir(path)
-    )
+    stream = load_stream(spark, sf_dir, "documents")
     arriving = (
         stream.filter(F.expr("doc_id % 2 = 1"))
         .select(F.explode(F.split("text", " ")).alias("w"))
@@ -2997,11 +2857,7 @@ def stream_erasure_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("c_custkey") % _DEL_MOD == 0)
         .select(F.col("c_custkey").alias("vic_key"))
     )
-    path = table_path(sf_dir, "events")
-    static = spark.read.parquet(path)
-    stream = spark.readStream.schema(static.schema).parquet(
-        _stage_stream_dir(path)
-    )
+    stream = load_stream(spark, sf_dir, "events")
     gated = (
         stream.select("event_type", "user_id")
         .join(vic, F.col("user_id") == F.col("vic_key"), "left")
@@ -3119,7 +2975,7 @@ def stream_compaction_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference has no storage-layout tooling (SURVEY §2c extension;
     completes the compaction family's lifecycle).
     """
-    ev = _events_stream(spark, sf_dir).select(
+    ev = load_stream(spark, sf_dir, "events").select(
         F.date_format("ts", "yyyy-MM-dd").alias("ingest_day"),
         F.expr(f"CAST({_SCT_SHARD_SPARK} AS INT)").alias("shard"),
     )
@@ -3242,7 +3098,7 @@ def stream_hll_register_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1.63 s with, same-session min-of-3): two md5s per narrow event
     # row do not dwarf the exchange of the row — the multimodal-family
     # asymmetry, unlike stream_cms's 4-md5s-per-token fan-out which won.
-    ev = _events_stream(spark, sf_dir).select(
+    ev = load_stream(spark, sf_dir, "events").select(
         "event_type",
         F.date_format("ts", "yyyy-MM-dd").alias("day"),
         F.expr(hll_bucket_sql("spark", _SHR_USERKEY)).alias("bucket"),
@@ -3347,7 +3203,7 @@ def stream_ddq_latency_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from kbrowse_spark.functions.sketches import ddq_spark_bucket
 
-    ev = _events_stream(spark, sf_dir).select(
+    ev = load_stream(spark, sf_dir, "events").select(
         "event_type", F.expr(_SDQ_CENTS).alias("cents")
     )
     sk = ev.select(
@@ -3436,10 +3292,10 @@ def stream_state_introspection(spark: SparkSession, sf_dir: str) -> DataFrame:
     only the checkpoint's state files, key-grain not event-grain).
 
     Determinism: the bounded availableNow replay leaves exactly the
-    final aggregate as state; the state partition count is pinned to
-    8 for the run (the conf is frozen into the checkpoint — the same
-    contract _run_to_memory documents), so the metadata columns are
-    literals the oracle can state.
+    final aggregate as state; the state partition count is
+    STREAM_STATE_PARTITIONS (8) for every bounded run, frozen into the
+    checkpoint, so the metadata columns are literals the oracle can
+    state.
 
     Reference has no state tooling (SURVEY §2c extension; joins
     stream_compaction_trigger / the checkpoint-resume evidence tests
@@ -3448,11 +3304,7 @@ def stream_state_introspection(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
     import shutil
 
-    path = table_path(sf_dir, "events")
-    static = spark.read.parquet(path)
-    stream = spark.readStream.schema(static.schema).parquet(
-        _stage_stream_dir(path)
-    )
+    stream = load_stream(spark, sf_dir, "events")
     agg = stream.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
     # Per-session token in the checkpoint path (ADVICE r13 #3, as
     # partition_pruning_audit): concurrent sessions on one fixture
@@ -3462,21 +3314,12 @@ def stream_state_introspection(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).hexdigest()[:12]
     ckpt = f"/tmp/kbrowse_state_introspect/{tag}"
     shutil.rmtree(ckpt, ignore_errors=True)
-    key = "spark.sql.shuffle.partitions"
-    with _SHUFFLE_CONF_LOCK:
-        saved = spark.conf.get(key)
-        try:
-            spark.conf.set(key, "8")
-            q = (
-                agg.writeStream.format("noop")
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set(key, saved)
+    _run_bounded(
+        agg.writeStream.format("noop")
+        .outputMode("complete")
+        .option("checkpointLocation", ckpt),
+        "stream_state_introspection",
+    )
     ss = spark.read.format("statestore").load(ckpt)
     md = spark.read.format("state-metadata").load(ckpt).select(
         F.col("operatorName").alias("operator_name"),
@@ -3581,11 +3424,7 @@ def stream_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CAST(conv(substring(md5(concat('cms', CAST(j AS STRING), ':', {t}))"
         ", 1, 8), 16, 10) AS BIGINT) % {w}"
     )
-    path = table_path(sf_dir, "documents")
-    static = spark.read.parquet(path)
-    stream = spark.readStream.schema(static.schema).parquet(
-        _stage_stream_dir(path)
-    )
+    stream = load_stream(spark, sf_dir, "documents")
     # Doc-grain repartition BEFORE the explode (r14 — the batch
     # cms_heavy_hitters fix, mirrored): the staged single-file micro-
     # batch scans as ONE task, so all 4 md5s per corpus token ran on
@@ -3616,7 +3455,7 @@ def stream_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min(F.coalesce(F.col("n"), F.lit(0))).alias("cms_estimate"))
     )
     exact = (
-        spark.read.parquet(path)
+        spark.read.parquet(table_path(sf_dir, "documents"))
         .select(
             F.explode(F.split(F.lower(F.col("text")), " ")).alias("word")
         )
@@ -3725,11 +3564,7 @@ def stream_gopher_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference has no corpus-quality tooling (SURVEY §2c extension).
     """
-    path = table_path(sf_dir, "documents")
-    static = spark.read.parquet(path)
-    stream = spark.readStream.schema(static.schema).parquet(
-        _stage_stream_dir(path)
-    )
+    stream = load_stream(spark, sf_dir, "documents")
     words = "filter(split(text, '\\\\s+'), t -> t != '')"
     lines = "split(text, '\\n')"
     stops = " + ".join(
@@ -4000,9 +3835,7 @@ def stream_ivfpq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .collect()
     )
-    stream = spark.readStream.schema(static.schema).parquet(
-        _stage_stream_dir(path)
-    )
+    stream = load_stream(spark, sf_dir, "embeddings")
     qstream = stream.filter(F.col("vec_id") < _SIP_NQ).select(
         F.col("vec_id").alias("qid"),
         F.expr(quant).alias("qqv"),

@@ -18,13 +18,14 @@ replaced as soon as either changes.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import threading
 from collections import OrderedDict
 from collections.abc import Callable
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -43,6 +44,13 @@ ENVELOPE_SCHEMA = T.StructType(
 )
 
 
+def ts_micros() -> Column:
+    """A TIMESTAMP(NANOS) ``ts``, which reads as a long under nanosAsLong,
+    as a TIMESTAMP truncated to micros by integer floor division, as
+    DuckDB and Arrow truncate it."""
+    return F.timestamp_micros(F.expr("ts div 1000"))
+
+
 def _to_envelope(df: DataFrame) -> DataFrame:
     """The one envelope adapter for a raw parquet read, batch or
     streaming.  An envelope-shaped read passes through; a read in the
@@ -57,7 +65,7 @@ def _to_envelope(df: DataFrame) -> DataFrame:
         raise ValueError(f"fixture missing envelope columns {missing}")
     ts = F.col("ts")
     if dict(df.dtypes).get("ts") == "bigint":
-        ts = F.timestamp_micros(F.expr("ts div 1000"))
+        ts = ts_micros()
     return df.select(
         F.encode(F.col("user_id").cast("string"), "UTF-8").alias("key"),
         F.encode(F.col("props"), "UTF-8").alias("value"),
@@ -87,17 +95,41 @@ def envelope_from_parquet(spark: SparkSession, path: str) -> DataFrame:
     return _to_envelope(_read_parquet(spark, path))
 
 
-def envelope_stream_from_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Follow-mode read of ``path`` in envelope shape, with the schema of
-    a static read.  A single file is staged as a one-file directory,
-    since the file-stream source needs a directory.  A directory of
-    Spark-written tables needs a glob (dir/*.parquet): the file source
-    does not recurse."""
-    from kbrowse_spark.operators.streaming_queries import _stage_stream_dir
+def stage_stream_dir(path: str, tag: str = "") -> str:
+    """A one-file directory holding a symlink to the parquet file
+    ``path`` (a copy where symlinks fail), since the file-stream source
+    reads directories.  Idempotent and keyed on ``path``; a ``tag``
+    gives the caller a private directory it may add files to."""
+    d = os.path.join(
+        "/tmp/kbrowse_stream_src", hashlib.md5(path.encode()).hexdigest()[:12]
+    )
+    if tag:
+        d += "_" + tag
+    os.makedirs(d, exist_ok=True)
+    link = os.path.join(d, os.path.basename(path))
+    if not os.path.exists(link):
+        try:
+            os.symlink(path, link)
+        except OSError:
+            import shutil
 
-    src = path if "*" in path or os.path.isdir(path) else _stage_stream_dir(path)
-    schema = _read_parquet(spark, src).schema
-    return _to_envelope(spark.readStream.schema(schema).parquet(src))
+            shutil.copyfile(path, link)
+    return d
+
+
+def stream_parquet(spark: SparkSession, path: str, tag: str = "") -> DataFrame:
+    """readStream over a parquet file, directory or glob, with the schema
+    of its static read (:func:`_read_parquet`, so an empty directory
+    streams as an envelope).  A single file streams from
+    :func:`stage_stream_dir`.  A directory of Spark-written tables needs
+    a glob (dir/*.parquet): the file source does not recurse."""
+    src = path if "*" in path or os.path.isdir(path) else stage_stream_dir(path, tag)
+    return spark.readStream.schema(_read_parquet(spark, src).schema).parquet(src)
+
+
+def envelope_stream_from_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Follow-mode read of ``path`` in envelope shape."""
+    return _to_envelope(stream_parquet(spark, path))
 
 
 class SourceSnapshot:

@@ -16,6 +16,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from kbrowse_spark.sources.fixture import stream_parquet, ts_micros
 
 TABLE_NAMES = (
     "region",
@@ -50,12 +53,39 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(table_path(sf_dir, name))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        # TIMESTAMP(NANOS) read via nanosAsLong: truncate to micros the
-        # same way DuckDB/Arrow do (integer floor division).
-        from pyspark.sql import functions as F
-
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        df = df.withColumn("ts", ts_micros())
     return df
+
+
+def load_stream(
+    spark: SparkSession, sf_dir: str, name: str, tag: str = ""
+) -> DataFrame:
+    """readStream over a table (:func:`stream_parquet`; ``tag`` names a
+    private staging directory), ``ts`` normalized as
+    :func:`_normalize_stream_ts` does."""
+    df = stream_parquet(spark, table_path(sf_dir, name), tag)
+    # The stream carries its static read's schema.
+    return _normalize_stream_ts(df, df)
+
+
+def _normalize_stream_ts(stream: DataFrame, static: DataFrame) -> DataFrame:
+    """Normalize a stream's ``ts`` column to TIMESTAMP (with local tz),
+    whatever physical type its parquet (read as ``static``) stored:
+
+    * TIMESTAMP(NANOS) surfaces as bigint (nanosAsLong) -> truncate to
+      micros exactly like DuckDB/Arrow do;
+    * plain ``timestamp[us]`` surfaces as TIMESTAMP_NTZ -> cast to
+      TIMESTAMP, interpreting the wall clock in the session time zone.
+      Watermarks/event-time ops require TIMESTAMP, and downstream
+      formatting renders back in session tz, so wall-clock values match
+      the oracle for ANY session time zone.
+    """
+    dt = dict(static.dtypes).get("ts")
+    if dt == "bigint":
+        return stream.withColumn("ts", ts_micros())
+    if dt == "timestamp_ntz":
+        return stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    return stream
 
 
 def load_events_range(
@@ -82,8 +112,6 @@ def load_events_range(
     """
     from datetime import datetime, timezone
 
-    from pyspark.sql import functions as F
-
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(table_path(sf_dir, "events"))
     raw_nanos = dict(df.dtypes).get("ts") == "bigint"
@@ -97,7 +125,7 @@ def load_events_range(
             df = df.filter(F.col("ts") >= _nanos(ts_ge))
         if ts_lt is not None:
             df = df.filter(F.col("ts") < _nanos(ts_lt))
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        df = df.withColumn("ts", ts_micros())
     else:
         if ts_ge is not None:
             df = df.filter(F.col("ts") >= F.lit(ts_ge).cast("timestamp"))

@@ -265,10 +265,8 @@ def test_ntz_fixture_streams_with_watermark(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from kbrowse_spark.operators.streaming_queries import (
-        _normalize_stream_ts,
-        _run_to_memory,
-    )
+    from kbrowse_spark.operators.streaming_queries import _run_to_memory
+    from kbrowse_spark.sources.tables import _normalize_stream_ts
 
     src = str(tmp_path / "ntz")
     os.makedirs(src)
@@ -723,3 +721,54 @@ def test_bucketed_user_state_multibatch(spark, tmp_path):
         if r.user_id not in final or r.n_events > final[r.user_id][0]:
             final[r.user_id] = (r.n_events, r.n_types, r.max_cents)
     assert final == {1: (3, 2, 225), 2: (1, 1, 1000), 3: (1, 1, 500)}
+
+
+def test_run_to_memory_leaves_no_view(spark, tmp_path):
+    """A memory-sink run's temp view pins its rows on the driver for the
+    life of the session: _run_to_memory must drop it, and the returned
+    DataFrame must still read the rows."""
+    from kbrowse_spark.operators.streaming_queries import _run_to_memory
+
+    src = str(tmp_path / "src")
+    spark.range(10).write.parquet(src)
+    results = [
+        _run_to_memory(spark.readStream.schema("id long").parquet(src), "append")
+        for _ in range(2)
+    ]
+    assert [df.count() for df in results] == [10, 10]
+    leaked = [
+        t.name for t in spark.catalog.listTables() if t.name.startswith("stream_result_")
+    ]
+    assert leaked == []
+
+
+def test_run_bounded_failure_reraises_and_restores(spark, tmp_path):
+    """A bounded run whose foreachBatch raises re-raises, leaves no
+    active query behind and restores the session's shuffle partitions."""
+    from pyspark.errors import StreamingQueryException
+
+    from kbrowse_spark.operators.streaming_queries import _run_bounded
+
+    src = str(tmp_path / "src")
+    spark.range(10).write.parquet(src)
+
+    def fail(batch_df, batch_id):
+        raise RuntimeError("batch failed")
+
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "3")  # differs from the bounded run's count
+    try:
+        before = {q.id for q in spark.streams.active}
+        writer = (
+            spark.readStream.schema("id long")
+            .parquet(src)
+            .writeStream.foreachBatch(fail)
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+        )
+        with pytest.raises(StreamingQueryException, match="batch failed"):
+            _run_bounded(writer, "failing_run")
+        assert {q.id for q in spark.streams.active} <= before
+        assert spark.conf.get(key) == "3"
+    finally:
+        spark.conf.set(key, saved)

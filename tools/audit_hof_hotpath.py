@@ -1,7 +1,7 @@
 """Audit: interpreted higher-order-function chains in per-row paths.
 
-The defect class (found by the sf1 scaling probe in round 12's PQ
-family, ROUND12.md §2e): Spark evaluates SQL higher-order functions
+The defect class (found by the sf1 scaling probe in the PQ family):
+Spark evaluates SQL higher-order functions
 (transform / aggregate / zip_with / filter / reduce ...) OUTSIDE
 whole-stage codegen — every invocation is interpreted, with an array
 allocation per lambda application.  A shallow HOF over a small array

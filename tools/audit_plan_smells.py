@@ -11,11 +11,11 @@ flags the patterns that kill 100 TB runs:
 * row-at-a-time PythonUDF in a scan-side filter/project (BatchEvalPython
   outside mapInPandas/ArrowEval paths).
 
-Streaming queries are audited too (r8): their builders execute their
-bounded streams eagerly, each awaitTermination site records the last
-micro-batch's executed physical plan (explainInternal), and the same
-smell checks run over every captured micro-batch plan plus the
-returned batch DataFrame's plan.
+Streaming queries are audited too: their builders execute their
+bounded streams eagerly through streaming_queries._run_bounded, which
+records each run's last micro-batch physical plan (explainInternal),
+and the same smell checks run over every captured micro-batch plan
+plus the returned batch DataFrame's plan.
 
 Usage: python tools/audit_plan_smells.py
 """
@@ -417,7 +417,7 @@ def find_smells(plan: str) -> list[str]:
 def _streaming_plans(spark, name, q) -> list[str]:
     """Run a streaming builder (they execute their bounded streams
     eagerly) and return every micro-batch physical plan it executed —
-    captured at the awaitTermination sites in streaming_queries.py.
+    captured by streaming_queries._run_bounded.
     The builder's returned batch DataFrame plan is included too (it is
     the read-back/post-aggregation half of the pipeline)."""
     from kbrowse_spark.operators.streaming_queries import (

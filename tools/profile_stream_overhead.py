@@ -18,8 +18,7 @@ durations (actual micro-batch plan execution, operator + sink),
 (one projected column, memory sink, same staging + conf path) is
 measured the same way as the absolute machinery FLOOR.
 
-Output: a markdown table on stdout + one JSON line (last) with the
-per-query splits, for ROUND12.md / bench notes.
+Output: a markdown table on stdout + one JSON line (last) with the splits.
 """
 
 from __future__ import annotations
@@ -46,10 +45,11 @@ BENCH_HEADLINERS = {
 def measure_floor(spark, sf_dir: str, n_runs: int) -> dict:
     """Stateless passthrough through the identical scaffolding."""
     from kbrowse_spark.operators import streaming_queries as sq
+    from kbrowse_spark.sources.tables import load_stream
 
     best: dict = {}
     for _ in range(n_runs):
-        stream = sq._events_stream(spark, sf_dir).select("event_id")
+        stream = load_stream(spark, sf_dir, "events").select("event_id")
         before = sq.stream_run_stats()
         sq._run_to_memory(stream, "append", label="measure_floor")
         # Stats keys are unique per run (label, label#2, …): pick this
