@@ -970,23 +970,13 @@ def stream_foreachbatch_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     dynamic partition overwrite touches only the replayed batch's
     directory, never the whole sink.
     """
-    import hashlib
-    import os
     import shutil
 
     ev = load_stream(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    # Content-addressed staging (like stage_stream_dir): repeated
-    # invocations reuse one directory pair instead of accumulating
-    # tmpdirs; stale state from a previous run is cleared up front so
-    # every run exercises a fresh exactly-once cycle.
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    out_dir = f"/tmp/kbrowse_febatch/{tag}/data"
-    ckpt = f"/tmp/kbrowse_febatch/{tag}/ckpt"
-    shutil.rmtree(out_dir, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    os.makedirs(out_dir, exist_ok=True)
+    base = _private_scratch("/tmp/kbrowse_febatch", sf_dir)
+    out_dir, ckpt = f"{base}/data", f"{base}/ckpt"
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         # Idempotent: a replay of batch_id rewrites batch_id=<n>/ only
@@ -1009,11 +999,9 @@ def stream_foreachbatch_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("event_type")
     )
-    # Materialize before cleaning the checkpoint (the exported parquet
-    # must outlive this call: the caller collects lazily).  The data
-    # dir is left for the session's lifetime like other /tmp staging.
+    # Materialized, so the caller's lazy collect reads no scratch file.
     result = result.localCheckpoint(eager=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    shutil.rmtree(base, ignore_errors=True)
     return result
 
 
@@ -1693,15 +1681,11 @@ def stream_foreachbatch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Delta/Iceberg MERGE) replaces the version-directory dance, not
     the plan.
     """
-    import hashlib
     import os
     import shutil
 
     ev = load_stream(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    base = f"/tmp/kbrowse_febmerge/{tag}"
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base, exist_ok=True)
+    base = _private_scratch("/tmp/kbrowse_febmerge", sf_dir)
 
     schema = (
         "user_id long, n_events long, total_cents long, last_ts_us long"
@@ -1754,7 +1738,7 @@ def stream_foreachbatch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         if d.startswith("v") and d[1:].isdigit()
     ]
     final = spark.read.schema(schema).parquet(f"{base}/v{max(versions)}")
-    return final.select(
+    result = final.select(
         "user_id",
         "n_events",
         "total_cents",
@@ -1762,6 +1746,10 @@ def stream_foreachbatch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.timestamp_micros(F.col("last_ts_us")), "yyyy-MM-dd HH:mm:ss"
         ).alias("last_seen"),
     ).orderBy("user_id")
+    # Materialized, so the caller's lazy collect reads no scratch file.
+    result = result.localCheckpoint(eager=True)
+    shutil.rmtree(base, ignore_errors=True)
+    return result
 
 
 # ---------------------------------------------------------------------------

@@ -14,7 +14,9 @@ The wall-clock kill switch (O10, `search.clj:117-121`) covers every
 search: after ``stop_after_seconds`` (86400 s when unset) a batch scan's
 job group is cancelled and a stream is stopped.  A consumer that goes
 away (the generator is closed: an HTTP disconnect, a broken pipe) ends
-the search through the same cancel.
+the search through the same cancel.  A follow search that has no row to
+send yields ``""`` every 0.5 s, so its consumer also gets control while
+the stream is idle; writing it out sends nothing.
 
 Error contract (Q8): ``QuerySpecError`` is raised before the first
 chunk, so callers can still answer 400 / exit 2.  Any other failure,
@@ -147,6 +149,7 @@ def _follow(
             except queue.Empty:
                 if not query.isActive:
                     break
+                yield ""  # idle: the consumer may check its client is there
         while not rows.empty():  # queued before the query ended
             yield rows.get_nowait()
         error = query.exception()

@@ -12,7 +12,9 @@ Routes:
 ``/search`` runs every search, bounded or ``follow=true``, through
 kbrowse_spark/search.run_search, which owns the array framing and the
 kill switch; this module maps it to HTTP and caches bounded responses.
-A client that closes the response cancels its search.
+A client that closes the response cancels its search, also while a
+follow stream has nothing to send: on each of the runner's idle ``""``
+chunks the handler peeks at the client's socket.
 
 Error contract (Q8): bad args -> 400 with ``{"error": msg}``.  A Spark
 failure, whether while planning or mid-stream, still returns a closed
@@ -27,6 +29,7 @@ an explicit flag here).
 from __future__ import annotations
 
 import itertools
+import socket
 import threading
 import time
 
@@ -64,6 +67,18 @@ class ResponseCache:
                 oldest = min(self._store, key=lambda k: self._store[k][0])
                 del self._store[oldest]
             self._store[key] = (time.monotonic(), text)
+
+
+def _client_gone(sock: socket.socket) -> bool:
+    """Whether the client has closed ``sock``: a peek that does not
+    block reads end-of-file.  werkzeug itself only sees a closed socket
+    when it writes, and an idle follow stream writes nothing."""
+    try:
+        return sock.recv(1, socket.MSG_PEEK | socket.MSG_DONTWAIT) == b""
+    except BlockingIOError:  # open, nothing to read
+        return False
+    except OSError:  # reset
+        return True
 
 
 def create_app(spark=None, config: EngineConfig | None = None):
@@ -183,6 +198,8 @@ def create_app(spark=None, config: EngineConfig | None = None):
             first = next(chunks)  # the search is planned here
         except QuerySpecError as e:
             return {"error": str(e)}, 400  # Q8, plan-time errors too
+        # The client's socket under werkzeug's server; absent elsewhere.
+        sock = request.environ.get("werkzeug.socket")
 
         def generate():
             # The response is kept for the cache only while it fits the
@@ -191,6 +208,10 @@ def create_app(spark=None, config: EngineConfig | None = None):
             size = 0
             try:
                 for chunk in itertools.chain([first], chunks):
+                    if not chunk:  # an idle follow stream
+                        if sock is not None and _client_gone(sock):
+                            return
+                        continue
                     size += len(chunk)
                     if size > cache.size_limit:
                         buf = None

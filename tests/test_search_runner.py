@@ -67,6 +67,48 @@ def test_follow_client_close_stops_stream(spark, topic_a_path):
     assert not ours()
 
 
+def test_follow_idle_disconnect_stops_stream(spark, topic_a_path):
+    """Under werkzeug's server, a follow /search whose client closes its
+    socket while no row is coming stops its streaming query: the handler
+    finds the closed socket without writing to it."""
+    import socket
+    import threading
+    import urllib.parse
+
+    from werkzeug.serving import make_server
+
+    before = {q.id for q in spark.streams.active}
+
+    def ours():
+        return [q for q in spark.streams.active if q.id not in before]
+
+    server = make_server("127.0.0.1", 0, create_app(spark=spark), threaded=True)
+    threading.Thread(target=server.serve_forever, daemon=True).start()
+    try:
+        qs = urllib.parse.urlencode({
+            "source-parquet": topic_a_path, "topics": "topic-a",
+            "follow": "true", "stop-after-seconds": "600",
+        })
+        sock = socket.create_connection(("127.0.0.1", server.port))
+        sock.sendall(f"GET /search?{qs} HTTP/1.1\r\nHost: localhost\r\n\r\n".encode())
+        sock.settimeout(60)
+        body = b""
+        while body.count(b'"type": "result"') < 3:  # caught up: now idle
+            data = sock.recv(65536)
+            assert data, f"the server closed the follow stream: {body!r}"
+            body += data
+        assert ours(), "the follow query should be running"
+        sock.close()
+        deadline = time.monotonic() + 10
+        while ours() and time.monotonic() < deadline:
+            time.sleep(0.1)
+        assert not ours()
+    finally:
+        for q in ours():
+            q.stop()
+        server.shutdown()
+
+
 def _error_only(err: str) -> None:
     """stderr is one {"error": ...} line, with no Python traceback."""
     assert "Traceback" not in err

@@ -129,6 +129,31 @@ def test_follow_matches_search(spark, sf_dir, topic_a_path, case, follow_caught_
         assert [r["value"] for r in batch[1:]] == values
 
 
+def test_foreachbatch_merge_runs_concurrently(spark, sf_dir):
+    """Two ``stream_foreachbatch_merge`` runs at once in one session each
+    keep their own scratch directory, so both match the DuckDB oracle."""
+    import threading
+
+    from kbrowse_spark.catalog import all_queries
+    from tests.oracle_check import compare
+
+    qdef = all_queries()["stream_foreachbatch_merge"]
+    results: list = [None, None]
+
+    def run(i: int) -> None:
+        try:
+            results[i] = compare(spark, qdef, sf_dir)
+        except Exception as e:  # reported by the assert below
+            results[i] = {"ok": False, "why": repr(e)}
+
+    threads = [threading.Thread(target=run, args=(i,)) for i in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert [r and r["ok"] for r in results] == [True, True], results
+
+
 def test_follow_empty_directory(spark, tmp_path):
     """Following an envelope directory with no files yet emits the
     pioneer and closes on the kill switch."""

@@ -18,19 +18,28 @@ durations (actual micro-batch plan execution, operator + sink),
 (one projected column, memory sink, same staging + conf path) is
 measured the same way as the absolute machinery FLOOR.
 
-Output: a markdown table on stdout + one JSON line (last) with the splits.
+Output: a markdown table on stdout + one JSON line (last) with the
+splits, and the full per-query split written to ``--out`` (default
+``.localdata/stream_overhead_split.json``, untracked).  The tracked
+``stream_overhead_split.json`` that ``bench.py`` reads changes only
+when it is named as ``--out``.
+
+Usage::
+
+    SPARK_GRAFT_SF_DIR=/path/to/sf0.1 python tools/profile_stream_overhead.py \
+        [--out stream_overhead_split.json]
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
 import time
 
-sys.path.insert(
-    0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..")
-)
+ROOT = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..")
+sys.path.insert(0, ROOT)
 
 from kbrowse_spark.catalog import all_queries  # noqa: E402
 from kbrowse_spark.session import get_spark, tune_for_input  # noqa: E402
@@ -65,7 +74,14 @@ def measure_floor(spark, sf_dir: str, n_runs: int) -> dict:
     return best
 
 
-def main() -> int:
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser()
+    ap.add_argument(
+        "--out",
+        default=os.path.join(ROOT, ".localdata", "stream_overhead_split.json"),
+        help="where to write the per-query split (JSON)",
+    )
+    out = ap.parse_args(argv).out
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     spark = get_spark("kbrowse_stream_profile")
@@ -157,11 +173,7 @@ def main() -> int:
         "floor": floor,
         "queries": rows,
     }
-    out = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        "..",
-        "stream_overhead_split.json",
-    )
+    os.makedirs(os.path.dirname(os.path.abspath(out)), exist_ok=True)
     with open(out, "w") as f:
         json.dump(summary, f, indent=1)
     print(json.dumps({k: v for k, v in summary.items() if k != "queries"}))
