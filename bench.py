@@ -23,10 +23,12 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from kbrowse_spark.catalog import all_queries  # noqa: E402
 from kbrowse_spark.session import get_spark  # noqa: E402
 
-# Representative, scale-stressing subset of the catalog: one per
-# operator family (agg, star join, topk, as-of, window, LSH dedup,
-# simhash, knn, text, streaming, kbrowse scan).
+# Representative, scale-stressing subset of the catalog: one query per
+# plan family, so a regression in any family's plan shape shows up in
+# the bench total.
 HEADLINE = [
+    # aggregation, star joins, top-k, as-of and window, LSH and simhash
+    # dedup, brute-force knn, text scoring, streaming, the kbrowse scan
     "q1_pricing_summary",
     "q3_shipping_priority",
     "q5_nation_revenue",
@@ -41,164 +43,136 @@ HEADLINE = [
     "embedding_neardup_rerank_np",
     "ann_ivf_label",
     "corpus_curation_pipeline",
-    # round 2 additions: scan throughput, wide join breadth, rollup union
+    # scan throughput, wide join breadth, rollup union
     "q6_forecast_revenue",
     "q10_returned_items",
     "rollup_hypertable_daily",
-    # round 2 second wave: iterative clustering, 5-way star, broadcast
-    # semi-join decontamination
+    # iterative clustering, 5-way star, broadcast semi-join
+    # decontamination
     "kmeans_lloyd",
     "q9_product_profit",
     "decontaminate_benchmark",
-    # round 2 third wave: corpus-trained bigram LM quality scoring
+    # corpus-trained bigram LM quality scoring
     "quality_lm_surprisal",
-    # round 4: retrieval ranking + marginal-contribution audit (the
-    # novelty op shares the cached shingle subtree with dedup_minhash)
+    # retrieval ranking, and the marginal-contribution audit (shares the
+    # cached shingle subtree with dedup_minhash_lsh)
     "bm25_term_scores",
     "ngram_novelty_rate",
-    # round 5: cover the driver-loop iterative family beyond kmeans
-    # (pagerank), the cell-blocked semantic-prune join, the sharded
-    # prefix-sum packer, and the Arrow grouped-map path — so
-    # regressions in those plan shapes show up in the bench trend.
+    # the driver-loop iterative family beyond kmeans (pagerank), the
+    # cell-blocked semantic-prune join, the sharded prefix-sum packer
+    # and the Arrow grouped-map path
     "pagerank_interaction",
     "semdedup_prune",
     "token_budget_packing",
     "arrowgroup_centroids",
-    # round 5 second wave: substring-span dedup (gram index + semi-join
-    # + span-merge windows) — the heaviest new text operator
+    # substring-span dedup: gram index + semi-join + span-merge windows
     "dedup_substring_spans",
-    # round 5 third wave: paragraph-grain keep-first dedup (segment
-    # explode + hash-keyed first-occurrence join), the composed RAG
-    # retrieve stage, and the event-time-timer sessionization path
-    # (applyInPandasWithState timeout machinery under bench watch).
+    # paragraph-grain keep-first dedup (segment explode + hash-keyed
+    # first-occurrence join), the composed RAG retrieve stage, and
+    # event-time-timer sessionization (applyInPandasWithState timeouts)
     "dedup_paragraph_keepfirst",
     "rag_chunk_retrieval",
     "stream_session_timeout",
-    # round 5 fourth wave: pigeonhole-blocked fuzzy join (record
-    # linkage candidate generation + short-segment verify) and the
-    # sweep-line concurrency prefix sum — two more plan families under
-    # bench watch.
+    # pigeonhole-blocked fuzzy join (record-linkage candidates +
+    # short-segment verify) and the sweep-line concurrency prefix sum
     "fuzzy_join_pigeonhole",
     "max_concurrency_sweep",
-    # incremental-ingest dedup: new-batch probe of the standing LSH
+    # incremental-ingest dedup: a new batch probes the standing LSH
     # index (shares the cached bucket table with dedup_minhash_lsh, so
-    # the delta it adds IS the incremental probe cost).
+    # the delta it adds is the incremental probe cost)
     "dedup_incremental_minhash",
-    # round 6: the O(log n) large-star/small-star CC (iterative join
-    # family with per-round checksum), and the vocab-blocked PMI pair
-    # mining (bounded candidate self-join) — two more plan families
-    # under bench watch.
+    # O(log n) large-star/small-star CC (iterative join with a
+    # per-round checksum) and vocab-blocked PMI pair mining (bounded
+    # candidate self-join)
     "dedup_cc_star",
     "pmi_cooccurrence",
-    # round 8: the iterative in-plan-argmax family (R-round BPE merge
-    # induction — chained 1-row broadcast attaches), and the heaviest
-    # mapInPandas codec path (AVI pack + idx1-seek parse).
+    # the iterative in-plan-argmax family (BPE merge induction, chained
+    # 1-row broadcast attaches) and the heaviest mapInPandas codec path
+    # (AVI pack + idx1-seek parse)
     "bpe_train_merges",
     "multimodal_video_extract",
-    # round 8 second wave: learned-centroid IVF (shares the Lloyd
-    # chain + cached point table with kmeans_lloyd, so its bench delta
-    # IS the probe cost), and the substring-dedup rewriter (gram index
-    # + keeper join + per-doc indexed-filter cut).
+    # learned-centroid IVF (shares the Lloyd chain and cached point
+    # table with kmeans_lloyd, so its delta is the probe cost) and the
+    # substring-dedup rewriter (gram index + keeper join + per-doc cut)
     "ann_ivf_kmeans",
     "dedup_span_removal",
-    # round 8 third wave: the EXACT similarity-join family (prefix/
-    # length/positional filtered inverted-index self-join) — the
-    # no-false-negative counterpart to the LSH shapes above.
+    # the exact similarity-join family (prefix/length/positional
+    # filtered inverted-index self-join): the no-false-negative
+    # counterpart to the LSH shapes above
     "dedup_prefix_filter_join",
-    # round 8 fourth wave: the A-Priori bounded-basket pair self-join
-    # and the one-scan histogram split finder (hist-GBDT inner loop) —
-    # two more plan families under bench watch.
+    # the A-Priori bounded-basket pair self-join and the one-scan
+    # histogram split finder (the hist-GBDT inner loop)
     "freq_itemsets_apriori",
     "decision_stump_histogram",
-    # round 9: the deterministic log-linear quantile sketch (integer
-    # bucket agg + sketch-grain readout) and the bounded subsequence
-    # enumeration (nested-transform fan-out, no self-join) — the two
-    # new plan families under bench watch.
+    # the deterministic log-linear quantile sketch (integer bucket agg +
+    # sketch-grain readout) and bounded subsequence enumeration
+    # (nested-transform fan-out, no self-join)
     "quantile_ddsketch_chars",
     "seq_pattern_triples",
-    # round 9 second wave: the windowed-adjacency blocking self-join
-    # (rank-range join per pass — the sorted-neighborhood family).
+    # windowed-adjacency blocking self-join (sorted neighbourhood)
     "linkage_sorted_neighborhood",
-    # round 9 third wave: iterative peeling (shrinking working set,
-    # count-stable early exit) and the one-shuffle hierarchical
-    # transform (per-leaf ancestor explode) — two more plan families
-    # under bench watch.
+    # iterative peeling (shrinking working set, count-stable early exit)
+    # and the one-shuffle hierarchical transform (per-leaf ancestor
+    # explode)
     "kcore_decomposition",
     "wavelet_haar_synopsis",
-    # round 9 fourth wave: grid-cell spatial blocking (bounded 9x
-    # probe fan-out) and the bucketed dominance sweep — two more plan
-    # families under bench watch.
+    # grid-cell spatial blocking (bounded 9x probe fan-out) and the
+    # bucketed dominance sweep
     "spatial_grid_epsilon_join",
     "skyline_price_size",
-    # round 9 fifth wave: the exact rank-sum AUC (score-grain
-    # two-level prefix sums, no corpus window) — the eval-metric
-    # family under bench watch.
+    # exact rank-sum AUC (score-grain two-level prefix sums, no corpus
+    # window)
     "eval_auc_rank",
-    # round 10: the ranking-metric composition (rag top-k + bigram
-    # relevance window) and the dual-layout Morton/linear skipping
-    # audit (2x exploded file assignment, file-grain stats) — two new
-    # plan families under bench watch.
+    # ranking-metric composition (rag top-k + bigram relevance window)
+    # and the dual-layout Morton/linear skipping audit
     "eval_mrr_ndcg_at_k",
     "layout_zorder_skipping",
-    # round 10 second wave: list-depth-bounded rank fusion (full-outer
-    # on two WindowGroupLimit lists) and the 8-stage unrolled Hilbert
-    # transform chain — two more plan families under bench watch.
+    # list-depth-bounded rank fusion (full outer join of two
+    # WindowGroupLimit lists) and the 8-stage unrolled Hilbert chain
     "rag_rrf_fusion",
     "layout_hilbert_skipping",
-    # round 10 third wave: the deterministic-resample fan-out family
-    # (x100 explode + hash multiplicities + replicate-grain order
-    # stats) and the frontier-expansion traversal (growing visited
-    # anti-join per round — distinct from kcore's shrinking peel) —
-    # two more plan families under bench watch.
+    # deterministic-resample fan-out (x100 explode + hash multiplicities
+    # + replicate-grain order stats) and frontier expansion (a growing
+    # visited anti-join per round, unlike kcore's shrinking peel)
     "poisson_bootstrap_ci",
     "bfs_multisource_hops",
-    # round 11: the diagnose->treat skew pair's treatment arm (dual
-    # md5 placement over the occurrence stream), the sharded-rank
-    # compaction repack sizing, and the first streaming ANN probe
-    # (stream-static join against the shared IVF index) — three new
-    # plan families under bench watch.
+    # skew treatment (dual md5 placement over the occurrence stream),
+    # sharded-rank compaction sizing, and a streaming ANN probe
+    # (stream-static join against the shared IVF index)
     "skew_salt_apply",
     "compaction_plan_audit",
     "stream_ann_ivf_probe",
-    # round 11 second wave: the hash-sharded per-epoch rank family
-    # (integer Spearman over seeded shuffle orders) — one more plan
-    # family under bench watch.
+    # hash-sharded per-epoch rank (integer Spearman over seeded orders)
     "epoch_shuffle_decorrelation",
-    # round 12: the composed IVF+PQ serve path (cell-prune join + ADC
-    # projection), the scan-shaped bloom runtime-filter audit (bit_or
-    # collapse + array-literal probe), the Arrow-numpy image feature
-    # step (PNG pack/decode/integral-image), the array-lambda-heavy
-    # Gopher rule scan, and the stateful small-file monitor — five new
-    # plan families under bench watch.
+    # the composed IVF+PQ serve path (cell-prune join + ADC projection),
+    # the bloom runtime-filter audit (bit_or collapse + array-literal
+    # probe), the Arrow-numpy image feature step, the array-lambda-heavy
+    # Gopher rule scan, and the stateful small-file monitor
     "ivfpq_retrieval",
     "join_bloom_runtime_filter",
     "multimodal_image_histogram",
     "quality_gopher_rules",
     "stream_compaction_trigger",
-    # round 13: the md5-register HLL family (exact-oracle sketches —
-    # set algebra at register grain, the fold sizing ladder, and the
-    # streaming register maintenance arm), the staged partitioned-write
-    # + manifest audit, and the 1-bit signature calibration — five new
-    # plan families under bench watch.
+    # the md5-register HLL family (set algebra at register grain, the
+    # fold sizing ladder, streaming register maintenance), the staged
+    # partitioned write + manifest audit, and 1-bit signature
+    # calibration
     "hll_set_algebra_pairs",
     "hll_fold_precision_ladder",
     "stream_hll_register_rollup",
     "partition_pruning_audit",
     "bbit_minhash_jaccard",
-    # round 13 second wave: the fixed-point-log2 entropy metric (the
-    # libm-free log the LC table pioneered, generalized) and the
-    # streaming DDSketch percentile monitor (bounded bucket state).
+    # fixed-point-log2 entropy and the streaming DDSketch percentile
+    # monitor (bounded bucket state)
     "vocab_entropy_fixedpoint",
     "stream_ddq_latency_monitor",
-    # round 13 third wave: cross-slice KL divergence + Zipf slope
-    # (both on the fixed-point log2), and the streaming CMS arm that
-    # completes the mergeable-sketch ingest trio.
+    # cross-slice KL divergence and Zipf slope (fixed-point log2), and
+    # the streaming count-min sketch
     "kl_divergence_lang_mix",
     "zipf_slope_fixedpoint",
     "stream_cms_heavy_hitters",
-    # round 13 fourth wave: the Fagin TA ranked-retrieval serve-depth
-    # audit (closed-form stopping depth, per-shard windows) and the
-    # checkpoint state-store batch read-back.
+    # Fagin TA serve-depth audit (closed-form stopping depth, per-shard
+    # windows) and the checkpoint state-store read-back
     "topk_fagin_ta_depth",
     "stream_state_introspection",
 ]
@@ -227,11 +201,11 @@ def is_contended(
 ) -> bool:
     """A run is contended when EITHER within-run spread says so (>25%
     of queries with max/min over 2x) OR the 1-minute load average was
-    already elevated when the run finished.  The r8 driver run proved
-    the spread metric alone cannot see BETWEEN-run neighbor load: three
-    identical-code runs spanned 37-53 s total with every within-run
-    spread < 2, and loadavg 2.35 recorded phantom 2.6x per-query
-    regressions as clean data.  cpus/8 (= 4 on the 32-cpu box) is well
+    already elevated when the run started.  Spread alone cannot see
+    BETWEEN-run neighbour load: three identical-code runs once spanned
+    37-53 s total with every within-run spread < 2, and a loadavg of
+    2.35 recorded phantom 2.6x per-query regressions as clean data.
+    cpus/8 (= 4 on a 32-cpu box) is well
     above this box's idle load (~0.3) and well below the loadavg a
     co-running Spark job produces (>8)."""
     return n_spread_gt2 > n_queries / 4 or loadavg_1m > cpus / 8
@@ -244,10 +218,10 @@ def contended_vs_reference(
     min_common: int = 10,
     min_ref_s: float = 0.3,
 ) -> tuple[bool, int, int]:
-    """Between-run contention detector (VERDICT r13 #2): min-of-N +
-    spread cannot see UNIFORM background load (all samples equally
-    slow -> spread ~ 1; the r13 driver run read 93.5 s vs 79.0 s idle
-    with n_spread_gt2 = 0).  Compare each query's min against its
+    """Between-run contention detector: min-of-N + spread cannot see
+    UNIFORM background load (all samples equally slow -> spread ~ 1; one
+    loaded run read 93.5 s against 79.0 s idle with n_spread_gt2 = 0).
+    Compare each query's min against its
     last IDLE-RUN min: when a MAJORITY of sufficiently-long queries
     exceed ``ratio`` x their idle reference, the whole run was slowed
     by something external and must be read as an upper bound.
@@ -303,11 +277,10 @@ def load_reference_times(path: str) -> dict[str, float]:
 _STDOUT_QUERIES_BUDGET = 1650
 # The ``__others__`` rollup and the dict's surrounding punctuation are
 # part of the serialized size too: reserve their worst case up front so
-# the budget invariant holds by construction, not by headroom (ADVICE
-# r12).  The reserve is DERIVED from the actual dict being serialized
-# (ADVICE r13 #4): worst case n = len(times) and total = sum of all
-# times — no hardcoded n<=999 / total<1e5 assumption to silently
-# outgrow.
+# the budget invariant holds by construction, not by headroom.  The
+# reserve is derived from the dict being serialized (worst case
+# n = len(times) and total = sum of all times), so no hardcoded
+# n <= 999 / total < 1e5 assumption can be silently outgrown.
 def _others_reserve(times: dict[str, float]) -> int:
     worst = (
         f',"__others__":{{"n":{len(times)},'
@@ -338,12 +311,60 @@ def stdout_queries(times: dict[str, float]) -> dict:
     return out
 
 
+def bench_runs() -> int:
+    """Timed runs per point for every measuring tool
+    (``SPARK_GRAFT_BENCH_RUNS``, default 3)."""
+    return int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
+
+
+def time_query(spark, builder, sf_dir: str, runs: int) -> tuple[float, float]:
+    """Time one catalog query over ``sf_dir`` through the noop sink (full
+    execution, no driver-side row transfer); returns (min seconds,
+    max/min spread).
+
+    One untimed run comes right before the samples: queries that ran
+    in between can evict this one's session-cached subtrees, and a
+    re-materialization inside the first sample once read 5.05 s for a
+    0.82 s query.  Of the ``runs`` timed runs the minimum is the
+    engine's steady-state time (single samples on a shared box read
+    3-5x high under neighbour load); the spread makes a contended run
+    identify itself."""
+
+    def run() -> None:
+        builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+    run()
+    samples = []
+    for _ in range(runs):
+        t0 = time.perf_counter()
+        run()
+        samples.append(time.perf_counter() - t0)
+    return min(samples), max(samples) / max(min(samples), 1e-9)
+
+
 def main() -> int:
+    # A dev-only subset filter: measure a few queries under the exact
+    # bench warm discipline (cross-session timings are not comparable
+    # with bench numbers).  A name outside HEADLINE is an error, not an
+    # empty run that prints a 0.0 total.
+    names = HEADLINE
+    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
+    if only:
+        wanted = {n for n in only.split(",") if n}
+        unknown = sorted(wanted - set(HEADLINE))
+        if unknown:
+            print(
+                "bench: SPARK_GRAFT_BENCH_ONLY names no headline query: "
+                + ", ".join(unknown),
+                file=sys.stderr,
+            )
+            return 2
+        names = [n for n in HEADLINE if n in wanted]
     # Sample load BEFORE any Spark work: by the end of a run the
-    # 1-minute average reflects the bench's OWN 32-thread activity
-    # (measured 4.79 on an otherwise idle box), which would trip the
-    # contended flag on every run.  At process start it reflects the
-    # pre-existing neighbor load the flag is meant to detect.
+    # 1-minute average reflects the bench's OWN activity (measured 4.79
+    # on an otherwise idle 32-cpu box), which would trip the contended
+    # flag on every run.  At process start it reflects the pre-existing
+    # neighbour load the flag is meant to detect.
     loadavg_1m = round(os.getloadavg()[0], 2)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
@@ -371,80 +392,36 @@ def main() -> int:
     # codegen is cached by generated source, so the timed runs below
     # measure steady-state engine throughput, not first-call JIT.
     warm_dir = "/root/testdata/sf0.001"
-    _only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
-    warm_names = (
-        [n for n in HEADLINE if n in set(_only.split(","))]
-        if _only
-        else HEADLINE
-    )
     if os.path.isdir(warm_dir) and warm_dir != sf_dir:
-        warm_pass(spark, qs, warm_names, warm_dir, "smoke-SF warm")
+        warm_pass(spark, qs, names, warm_dir, "smoke-SF warm")
 
     # One untimed warm pass at the TARGET sf first: several headline
     # queries share session-cached subtrees (shingles, LSH buckets,
     # verified pairs — functions/cache_registry.py), so whichever
-    # family member runs first otherwise pays the one-time cache
-    # materialization inside its first timed sample.  That conflated
-    # cold-cache cost with neighbor noise in the spread column (r6:
-    # 7/36 queries > 2x spread on an idle box).  After the warm pass,
-    # min-of-N measures steady state and spread means machine noise
-    # only.
-    warm_pass(spark, qs, warm_names, sf_dir, "warm pass")
+    # family member runs first would otherwise pay the one-time cache
+    # materialization inside its first timed sample, conflating
+    # cold-cache cost with neighbour noise in the spread column (7 of
+    # 36 queries once read > 2x spread on an idle box).  A failure here
+    # is named on stderr.
+    warm_pass(spark, qs, names, sf_dir, "warm pass")
 
-    # Min-of-3 per query: single samples on a shared box regularly read
-    # 3-5x high under neighbor load (docs/SCALING_MEASUREMENTS.md — the
-    # r5 "q1 6x regression" was exactly this artifact); the minimum is
-    # the engine's actual throughput.  We also report each query's
-    # max/min spread so a contended run is SELF-IDENTIFYING: spread > 2
-    # on several queries means the box was busy and the round's numbers
-    # should be read as upper bounds, not a trend.
-    n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    # Dev-only subset filter (r14): measure a few queries under the
-    # EXACT bench warm discipline (smoke-SF compile pass, table warms,
-    # adjacent warm run, min-of-N) — cross-context single-session
-    # timings proved incomparable to bench numbers.  Unset in the
-    # driver, so the published metric is unchanged.
-    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
-    bench_names = (
-        [n for n in HEADLINE if n in set(only.split(","))]
-        if only
-        else HEADLINE
-    )
+    n_runs = bench_runs()
     times: dict[str, float] = {}
     spreads: dict[str, float] = {}
-    for name in bench_names:
-        # Adjacent discarded warm run: the GLOBAL warm pass above ran
-        # ~65 other queries between warming this one and timing it,
-        # which can evict its working set (r12 idle run: q3 read
-        # 5.05 s where the driver's record read 0.82 s — warmup/cache
-        # attribution, not a regression).  One untimed execution
-        # immediately before the samples makes min-of-N measure
-        # steady state by construction (VERDICT r12 #3).
-        try:
-            qs[name].builder(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        except Exception:  # noqa: BLE001 - named by warm_pass already
-            pass
-        samples: list[float] = []
-        for _ in range(n_runs):
-            t0 = time.perf_counter()
-            df = qs[name].builder(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            samples.append(time.perf_counter() - t0)
-        times[name] = round(min(samples), 3)
-        spreads[name] = round(max(samples) / max(min(samples), 1e-9), 2)
+    for name in names:
+        t, spread = time_query(spark, qs[name].builder, sf_dir, n_runs)
+        times[name] = round(t, 3)
+        spreads[name] = round(spread, 2)
 
     total = round(sum(times.values()), 3)
     n_contended = sum(1 for s in spreads.values() if s > 2.0)
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    # Between-run contention vs the last idle reference (VERDICT r13
-    # #2): spread/loadavg cannot see uniform neighbor load.  The
-    # reference ships with the repo (bench_idle_reference.json,
-    # refreshed each round from an idle min-merged run); its numbers
-    # are box-relative, so a majority-slow verdict on DIFFERENT
-    # hardware only means "read these numbers as upper bounds vs the
-    # recorded baseline", which is exactly the flag's contract.
+    # Between-run contention vs the last idle reference: spread and
+    # loadavg cannot see uniform neighbour load.  The reference ships
+    # with the repo (bench_idle_reference.json, an idle min-merged run);
+    # its numbers are box-relative, so a majority-slow verdict on
+    # DIFFERENT hardware only means "read these numbers as upper bounds
+    # vs the recorded baseline", which is exactly the flag's contract.
     ref_path = os.environ.get(
         "SPARK_GRAFT_BENCH_REF",
         os.path.join(
@@ -471,15 +448,14 @@ def main() -> int:
         "unit": "sec",
         # Stdout carries 2-decimal (10 ms) per-query times for the
         # SLOWEST queries and folds the fastest into one "others"
-        # rollup (stdout_queries below): at 66 headline queries the
-        # full dict outgrew the driver's 2000-byte stdout tail (r12:
-        # 2003 bytes -> parsed:null), and the slow queries are where
-        # regressions live; the sidecar keeps every query at 3
-        # decimals.
+        # rollup (stdout_queries): at 66 headline queries the full dict
+        # outgrew the driver's 2000-byte stdout tail (2003 bytes ->
+        # parsed:null), and the slow queries are where regressions
+        # live; the sidecar keeps every query at 3 decimals.
         "queries": {},
         "n_queries": len(times),
         "contended": (
-            is_contended(n_contended, len(bench_names), loadavg_1m, cpus)
+            is_contended(n_contended, len(names), loadavg_1m, cpus)
             or ref_flag
         ),
         "n_spread_gt2": n_contended,
@@ -491,10 +467,10 @@ def main() -> int:
     }
     summary["queries"] = stdout_queries(times)
     # Full per-query detail (incl. the spread column) goes to a sidecar
-    # file + stderr; the driver's record keeps only a ~2 KB tail of
-    # stdout, and r1-r8 every BENCH_r*.json had "parsed": null because
-    # the spread dict pushed the single JSON line past that capture.
-    # The stdout line must stay compact AND be the LAST line printed.
+    # file + stderr: the driver's record keeps only a ~2 KB tail of
+    # stdout, and a spread dict on the stdout line once pushed it past
+    # that capture.  The stdout line must stay compact AND be the LAST
+    # line printed.
     detail_path = os.environ.get(
         "SPARK_GRAFT_BENCH_DETAIL", os.path.join(os.path.dirname(
             os.path.abspath(__file__)), "bench_detail.json")
@@ -506,8 +482,7 @@ def main() -> int:
         # Streaming deltas must be read NET of fixed micro-batch
         # machinery: stream_overhead_split.json records per-query
         # operator_ms (addBatch) vs machinery_ms — subtract the
-        # machinery column before calling a streaming regression
-        # (VERDICT r12 perf notes).
+        # machinery column before calling a streaming regression.
         streaming_note=(
             "stream_* deltas: subtract stream_overhead_split.json"
             " machinery_ms before comparing rounds"

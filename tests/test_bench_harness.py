@@ -4,6 +4,8 @@ surface only as a mystery spread outlier — VERDICT r7 #3)."""
 
 from __future__ import annotations
 
+import pytest
+
 import bench
 
 
@@ -218,3 +220,62 @@ def test_others_reserve_derived_from_actual_counts():
     )
     n = out["__others__"]["n"]
     assert n > 999  # beyond the old hardcoded assumption
+
+
+def test_bench_only_unknown_names_exit_before_spark(tmp_path, monkeypatch, capsys):
+    """A SPARK_GRAFT_BENCH_ONLY name outside HEADLINE must stop the run
+    (exit 2, naming it) instead of timing nothing and printing a 0.0
+    total; no Spark session is needed to say so."""
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_ONLY", "q1_pricing_summary,no_such_query")
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", str(tmp_path))
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_DETAIL", str(tmp_path / "detail.json"))
+    monkeypatch.setattr(
+        bench, "get_spark", lambda *a, **k: pytest.fail("started Spark")
+    )
+    assert bench.main() == 2
+    out = capsys.readouterr()
+    assert "no_such_query" in out.err
+    assert "q1_pricing_summary" not in out.err
+    assert out.out == ""
+
+
+class _NoopSink:
+    """Stands in for ``builder(...)``: ``.write.format().mode().save()``
+    calls the given function."""
+
+    def __init__(self, on_save):
+        self.on_save = on_save
+        self.write = self
+
+    def format(self, _fmt):
+        return self
+
+    def mode(self, _mode):
+        return self
+
+    def save(self):
+        self.on_save()
+
+
+def test_time_query_warms_once_then_takes_min_and_spread(monkeypatch):
+    import itertools
+
+    clock = itertools.count()
+    monkeypatch.setattr(bench.time, "perf_counter", lambda: next(clock))
+    durations = iter([99, 4, 2, 3])  # warm run, then three timed runs
+    calls = []
+
+    def builder(spark, sf_dir):
+        def save():
+            calls.append(sf_dir)
+            for _ in range(next(durations)):
+                next(clock)
+
+        return _NoopSink(save)
+
+    best, spread = bench.time_query(None, builder, "/data", 3)
+    assert calls == ["/data"] * 4
+    # each timed sample is its run's ticks plus the one tick of reading
+    # the clock at the start
+    assert best == 3
+    assert spread == 5 / 3

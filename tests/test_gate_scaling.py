@@ -85,3 +85,24 @@ def test_live_doc_parses_nonempty():
     rec = parse_recorded(open(path).read())
     assert len(rec) >= 50  # the standing table the gate selects from
     assert all(v[0] > 0 and v[1] > 0 for v in rec.values())
+
+
+def test_gate_refuses_empty_record(tmp_path, monkeypatch, capsys):
+    """With sf1 data present but no recorded rows, the gate would select
+    nothing and report CLEAN; it must fail instead, before starting
+    Spark and without overwriting its last-run artifact."""
+    import sys
+
+    from tools import gate_scaling_sf1 as gate
+
+    sf1 = tmp_path / "sf1"
+    sf1.mkdir()
+    doc = tmp_path / "SCALING_MEASUREMENTS.md"
+    doc.write_text("# Scaling\n\n## sf10 step\n\n| `op` | 1.0 | 2.0 | 2.0x | 1.1x |\n")
+    monkeypatch.setattr(gate, "SF1", str(sf1))
+    monkeypatch.setattr(gate, "DOC", str(doc))
+    monkeypatch.setattr(gate, "REPO", str(tmp_path))
+    monkeypatch.setattr(sys, "argv", ["gate_scaling_sf1.py"])
+    assert gate.main() == 1
+    assert "sf1 step" in capsys.readouterr().out
+    assert not (tmp_path / "gate_scaling_sf1_last.json").exists()

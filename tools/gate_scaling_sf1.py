@@ -1,10 +1,9 @@
-"""Standing sf1 scaling gate (VERDICT r12 directive #2).
+"""Standing sf1 scaling gate, run by tools/run_all_checks.sh.
 
-The sf1 probe caught round 12's biggest defect — interpreted
-higher-order-function PQ encode, 40x — but only because someone thought
-to run it.  This gate runs EVERY round (wired into
-tools/run_all_checks.sh): it re-measures the slowest recorded operators
-at sf0.1 and sf1 and flags
+A scale defect (an interpreted higher-order-function PQ encode that
+stepped 40x over the sf0.1 -> sf1 decade) was once caught only because
+someone happened to run the sf1 probe.  This gate re-measures the
+slowest recorded operators at sf0.1 and sf1 on every sweep and flags
 
 * **super-linear / fixed-cost-bound alarms**: sf1/sf0.1 wall ratio
   above 3.0x (sf1 is 10x the data; overhead-dominated ops step ~1-2x,
@@ -20,13 +19,16 @@ at sf0.1 and sf1 and flags
 
 Selection: the slowest-N operators by recorded sf1 time (default 6,
 ``SPARK_GRAFT_GATE_SLOWEST``), plus any names passed as argv (use this
-for a round's new operators before their rows exist).  Ratio flags
-require sf1 >= 1.0 s so sub-second timer noise can't trip the gate.
+for new operators before their rows exist).  Ratio flags require
+sf1 >= 1.0 s so sub-second timer noise can't trip the gate.  Each point
+is ``bench.time_query`` (``SPARK_GRAFT_BENCH_RUNS`` runs) with shuffle
+partitions sized for the directory read (``tune_for_input``).
 
 Prereq: ``.localdata/sf1`` from tools/make_bigsf.py.  Missing data is a
 loud SKIP, not a silent pass — the step prints the regeneration command
 and exits 0 so a fresh clone isn't red, but the sweep log shows the
-gate did not run.
+gate did not run.  A doc without ``## sf1 step`` rows is a failure: the
+gate would select nothing and report CLEAN.
 
 The decision logic is the pure function :func:`evaluate` so the
 red-green fixture test (tests/test_gate_scaling.py) can drive it with
@@ -35,12 +37,13 @@ synthetic measurements.
 
 from __future__ import annotations
 
+import json
 import os
-import re
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools.scaling_probe import section_times  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF01 = "/root/testdata/sf0.1"
@@ -92,20 +95,7 @@ ALLOW: dict[str, tuple[float, str]] = {
 
 def parse_recorded(doc_text: str) -> dict[str, tuple[float, float, float]]:
     """{op: (t_sf01, t_sf1, ratio)} from the '## sf1 step' table."""
-    sec = re.search(r"## sf1 step.*?(?=\n## |\Z)", doc_text, flags=re.S)
-    if not sec:
-        return {}
-    out = {}
-    for m in re.finditer(
-        r"\| `([a-z0-9_]+)` \| ([0-9.]+) \| ([0-9.]+) \| ([0-9.]+)x \|",
-        sec.group(0),
-    ):
-        out[m.group(1)] = (
-            float(m.group(2)),
-            float(m.group(3)),
-            float(m.group(4)),
-        )
-    return out
+    return section_times(doc_text, "sf1")
 
 
 def evaluate(
@@ -147,21 +137,6 @@ def evaluate(
     return flags
 
 
-def _measure(spark, qs, name: str, sf: str, n_runs: int) -> float:
-    """Adjacent discarded warm run + min-of-N (the bench discipline)."""
-    build = lambda: (  # noqa: E731
-        qs[name].builder(spark, sf).write.format("noop")
-        .mode("overwrite").save()
-    )
-    build()
-    samples = []
-    for _ in range(n_runs):
-        t0 = time.perf_counter()
-        build()
-        samples.append(time.perf_counter() - t0)
-    return min(samples)
-
-
 def main() -> int:
     if not os.path.isdir(SF1):
         print(
@@ -169,17 +144,23 @@ def main() -> int:
             " `python tools/make_bigsf.py` to enable the standing gate"
         )
         return 0
-
-    from kbrowse_spark.catalog import all_queries
-    from kbrowse_spark.functions.cache_registry import invalidate
-    from kbrowse_spark.session import get_spark
-
     with open(DOC) as f:
         recorded = parse_recorded(f.read())
+    if not recorded:
+        print(
+            f"FAILED gate_scaling_sf1: no rows under `## sf1 step` in {DOC};"
+            " restore it from git, or record rows with"
+            f" `python tools/scaling_probe.py {SF01} {SF1} NAME ...`"
+        )
+        return 1
+
+    from bench import bench_runs, time_query
+    from kbrowse_spark.catalog import all_queries
+    from kbrowse_spark.functions.cache_registry import invalidate
+    from kbrowse_spark.session import get_spark, tune_for_input
+
     n_slowest = int(os.environ.get("SPARK_GRAFT_GATE_SLOWEST", "6"))
-    # min-of-3 (was 2, VERDICT r13 #3): the gate's flags gate a round,
-    # so one straggler sample must not be able to flip them.
-    n_runs = int(os.environ.get("SPARK_GRAFT_GATE_RUNS", "3"))
+    n_runs = bench_runs()
     qs = all_queries()
     picked = [
         name
@@ -195,8 +176,10 @@ def main() -> int:
     spark = get_spark("gate_scaling_sf1")
     measured: dict[str, tuple[float, float]] = {}
     for name in ops:
-        t01 = _measure(spark, qs, name, SF01, n_runs)
-        t1 = _measure(spark, qs, name, SF1, n_runs)
+        tune_for_input(spark, SF01)
+        t01, _ = time_query(spark, qs[name].builder, SF01, n_runs)
+        tune_for_input(spark, SF1)
+        t1, _ = time_query(spark, qs[name].builder, SF1, n_runs)
         measured[name] = (t01, t1)
         rec = recorded.get(name)
         rec_s = f" (recorded sf1 {rec[1]:.2f}s)" if rec else " (no row)"
@@ -207,10 +190,8 @@ def main() -> int:
     invalidate()
 
     flags = evaluate(measured, recorded)
-    # Recorded table: the gate's evidence trail, one JSON per run
-    # (overwritten — the git history of this file IS the trend).
-    import json
-
+    # The gate's evidence trail, one JSON per run (overwritten — the
+    # git history of this file is the trend).
     record = {
         "metric": "gate_scaling_sf1",
         "runs_per_point": n_runs,

@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Measure spatial_grid_epsilon_join's sf1 -> sf10 step with
-DENSITY-SCALED eps (VERDICT r9 #5): eps(n) = _EPS * sqrt(n0/n) holds
+DENSITY-SCALED eps: eps(n) = _EPS * sqrt(n0/n) holds
 expected cell occupancy flat, so candidate volume and expected output
 pairs grow LINEARLY in n — the deployment posture the operator's
 docstring promises ("a density-aware deployment shrinks eps the way
@@ -22,6 +22,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import bench_runs  # noqa: E402
 from kbrowse_spark.operators.knn import (  # noqa: E402
     _eps_for_density,
     _spatial_pairs,
@@ -42,7 +43,7 @@ def main() -> None:
             raise SystemExit(f"missing {d}: run tools/make_bigsf.py first")
     spark = get_spark("probe_spatial_density_eps")
     tune_for_input(spark, ARMS[-1][0])
-    n_runs = int(os.environ.get("SPARK_GRAFT_PROBE_RUNS", "2"))
+    n_runs = bench_runs()
 
     rows = []
     for d, label in ARMS:

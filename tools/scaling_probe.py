@@ -1,146 +1,176 @@
-"""Measure how headline operators scale across the available scale
-factors (sf0.001 / sf0.01 / sf0.1 — 100x data range) and write
+"""Time catalog queries over one data step and record them in
 docs/SCALING_MEASUREMENTS.md.
 
-A near-flat time ratio vs the 10x data ratio means fixed overhead
-dominates (fine at these tiny SFs); a ratio near 10x means the
-operator is already data-bound; super-linear growth flags a plan that
-would not survive 100 TB.
+Usage: python tools/scaling_probe.py SMALL_DIR BIG_DIR [name ...]
 
-Usage: python tools/scaling_probe.py
+Each query runs on SMALL_DIR and on BIG_DIR through ``bench.time_query``
+(an adjacent warm run, then the min of ``SPARK_GRAFT_BENCH_RUNS``
+noop-sink runs and their max/min spread), with shuffle partitions sized
+for the directory being read (``tune_for_input``).  The results go to
+the doc section ``## <basename(BIG_DIR)> step``, one row per query:
+
+    | `op` | t_small | t_big | ratio x | spread x |
+
+The doc is the query list: with no names, the queries are the rows
+already in that section; names add or refresh rows.  Rows not measured,
+the section's prose and its ``- `op`: note`` bullets are kept, and every
+other section stays byte-identical.  The section's ``Measured:`` line
+records the small directory, the cores and the runs per point.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+DOC = os.path.join(REPO, "docs", "SCALING_MEASUREMENTS.md")
 
-from kbrowse_spark.catalog import all_queries  # noqa: E402
-from kbrowse_spark.session import get_spark  # noqa: E402
-
-SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
-OPS = [
-    "q1_pricing_summary",
-    "q5_nation_revenue",
-    "asof_join_event_order",
-    "window_topk_per_group",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "embedding_neardup_rerank_np",
-    "knn_batch_topk_join",
-    "corpus_curation_pipeline",
-    "kbrowse_regex_scan",
-    "kmeans_lloyd",
-    "decontaminate_benchmark",
-    "q9_product_profit",
-    "merge_upsert_events",
-    "lateral_topn_orders",
-    "quality_lm_surprisal",
-    "tfidf_top_terms",
-    "embedding_random_projection",
-    "ngram_novelty_rate",
-    "semdedup_prune",
-    "bm25_term_scores",
-    # round 5 additions
-    "dedup_substring_spans",
-    "cms_heavy_hitters",
-    "sample_reservoir_per_stratum",
-    "corpus_snapshot_diff",
-    "seq_length_histogram",
-    "graph_triangle_closure",
-    "quantile_prune_quality",
-    "pagerank_interaction",
-    # round 5 second session
-    "dsir_hashed_importance",
-    "dedup_paragraph_keepfirst",
-    "rag_chunk_retrieval",
-    "tokenizer_fertility_stats",
-    "cuped_adjusted_metric",
-    "event_transition_matrix",
-    "recursive_cte_paths",
-    "data_quality_report",
-    # round 5 third session
-    "fuzzy_join_pigeonhole",
-    "max_concurrency_sweep",
-    "ewma_daily_revenue",
-    "corr_value_props_by_type",
-    "chisq_type_bucket_cells",
-    # round 6
-    "dedup_cc_star",
-    "dedup_containment",
-    "pmi_cooccurrence",
-    "mix_temperature_quota",
-    "cusum_event_drift",
-    "embed_batch_inference",
-    "multimodal_feature_extract",
-]
+_ROW = re.compile(r"\| `([a-z0-9_]+)` \|")
+_TIMES = re.compile(
+    r"\| `([a-z0-9_]+)` \| ([0-9.]+) \| ([0-9.]+) \| ([0-9.]+)x \|"
+)
 
 
-def main() -> None:
-    spark = get_spark("scaling_probe")
-    qs = all_queries()
-    # Warm: run everything once at the smallest SF (codegen + JVM).
-    for name in OPS:
-        qs[name].builder(spark, SFS[0]).write.format("noop").mode("overwrite").save()
+def _section(doc: str, big: str) -> re.Match | None:
+    return re.search(
+        rf"^## {re.escape(big)} step$.*?(?=\n## |\Z)", doc, flags=re.S | re.M
+    )
 
-    # min of 3 runs: this box has noisy neighbors and a single sample
-    # regularly reads 3-5x high (an r5 verdict item: min-of-1/2 made a
-    # sublinear operator look super-linear); min is the robust
-    # steady-state estimator for a deterministic workload.  The spread
-    # (max/min over samples, worst across SFs) is reported so a
-    # contended regeneration is self-identifying.
-    n_runs = int(os.environ.get("SPARK_GRAFT_PROBE_RUNS", "3"))
-    results: dict[str, list[float]] = {}
-    spreads: dict[str, float] = {}
-    for name in OPS:
-        times = []
-        worst_spread = 1.0
-        for sf in SFS:
-            samples = []
-            for _ in range(n_runs):
-                t0 = time.perf_counter()
-                qs[name].builder(spark, sf).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                samples.append(time.perf_counter() - t0)
-            times.append(round(min(samples), 2))
-            worst_spread = max(
-                worst_spread, max(samples) / max(min(samples), 1e-9)
-            )
-        results[name] = times
-        spreads[name] = round(worst_spread, 1)
 
-    lines = [
-        "# Scaling measurements (generated)",
-        "",
-        "Wall-clock per operator across a 100x data range on local[32]",
-        "(steady-state: plans pre-compiled). `x0.01->0.1` is the time",
-        "ratio over the last 10x data step — the number that predicts",
-        "behavior at the next orders of magnitude. Regenerate with",
-        "`python tools/scaling_probe.py`.",
-        "",
-        "`spread` is the worst max/min sample ratio seen while",
-        "regenerating (min-of-3 per cell); rows with spread > 2 were",
-        "measured under neighbor load and their ratios are upper",
-        "bounds, not trends.",
-        "",
-        "| operator | sf0.001 s | sf0.01 s | sf0.1 s | x0.01->0.1 | spread |",
-        "|---|---|---|---|---|---|",
+def section_times(doc: str, big: str) -> dict[str, tuple[float, float, float]]:
+    """{op: (t_small, t_big, ratio)} from the ``## <big> step`` table."""
+    sec = _section(doc, big)
+    return {
+        m.group(1): (float(m.group(2)), float(m.group(3)), float(m.group(4)))
+        for m in _TIMES.finditer(sec.group(0) if sec else "")
+    }
+
+
+def _table_header(small: str, big: str) -> list[str]:
+    step = f"x{small.removeprefix('sf')}->{big.removeprefix('sf')}"
+    return [
+        f"| operator | {small} s | {big} s | {step} | spread |",
+        "|---|---|---|---|---|",
     ]
-    for name, ts in results.items():
-        ratio = round(ts[2] / ts[1], 1) if ts[1] > 0 else float("nan")
-        lines.append(
-            f"| `{name}` | {ts[0]} | {ts[1]} | {ts[2]} | {ratio}x |"
-            f" {spreads[name]}x |"
+
+
+def _parts(doc: str, small: str, big: str):
+    """The ``## <big> step`` section as (match or None, lines before the
+    table, {op: row line} in table order, lines after the table).
+    Raises ValueError when the section's table was measured from a
+    different small directory."""
+    sec = _section(doc, big)
+    if sec is None:
+        return None, [f"## {big} step", ""], {}, [""]
+    lines = sec.group(0).split("\n")
+    start = next(
+        (i for i, s in enumerate(lines) if s.startswith("| operator |")),
+        len(lines),
+    )
+    end = start
+    while end < len(lines) and lines[end].startswith("|"):
+        end += 1
+    header = _table_header(small, big)[0]
+    if start < len(lines) and lines[start] != header:
+        raise ValueError(
+            f"## {big} step has table {lines[start]!r}, not {header!r}"
         )
-    out = "\n".join(lines) + "\n"
-    with open("docs/SCALING_MEASUREMENTS.md", "w") as f:
-        f.write(out)
-    print(out)
+    rows = {
+        m.group(1): s for s in lines[start:end] if (m := _ROW.match(s))
+    }
+    return sec, lines[:start], rows, lines[end:] or [""]
+
+
+def section_ops(doc: str, small: str, big: str) -> list[str]:
+    """The queries already recorded in ``## <big> step``, in row order."""
+    return list(_parts(doc, small, big)[2])
+
+
+def write_section(
+    doc: str,
+    small: str,
+    big: str,
+    where: str,
+    measured: dict[str, tuple[float, float, float]],
+) -> str:
+    """Return ``doc`` with ``measured`` {op: (t_small, t_big, spread)}
+    written into ``## <big> step``: measured rows replaced in place or
+    appended, other rows, prose and note bullets kept, the section's
+    ``Measured:`` line set to ``where``.  A missing section is appended;
+    the rest of the doc is unchanged."""
+    sec, head, rows, tail = _parts(doc, small, big)
+    for op, (t_small, t_big, spread) in measured.items():
+        ratio = round(t_big / max(t_small, 1e-9), 1)
+        rows[op] = (
+            f"| `{op}` | {round(t_small, 2)} | {round(t_big, 2)} |"
+            f" {ratio}x | {round(spread, 1)}x |"
+        )
+    at = next((i for i, s in enumerate(head) if s.startswith("Measured:")), None)
+    if at is None:
+        head = head + [where, ""]
+    else:
+        head = head[:at] + [where] + head[at + 1 :]
+    text = "\n".join(head + _table_header(small, big) + list(rows.values()) + tail)
+    if sec is None:
+        return doc.rstrip("\n") + "\n\n" + text
+    return doc[: sec.start()] + text + doc[sec.end() :]
+
+
+def main(argv: list[str]) -> int:
+    if len(argv) < 2 or any(a.startswith("-") for a in argv):
+        print(__doc__.split("\n\n")[1], file=sys.stderr)
+        return 2
+    small_dir, big_dir, *names = argv
+    small, big = (os.path.basename(os.path.normpath(d)) for d in argv[:2])
+    for d in (small_dir, big_dir):
+        if not os.path.isdir(d):
+            print(f"missing {d} (tools/make_bigsf.py writes sf1/sf10)",
+                  file=sys.stderr)
+            return 2
+    with open(DOC) as f:
+        ops = names or section_ops(f.read(), small, big)
+    if not ops:
+        print(f"no rows in ## {big} step and no names given", file=sys.stderr)
+        return 2
+
+    from bench import bench_runs, time_query
+    from kbrowse_spark.catalog import all_queries
+    from kbrowse_spark.functions.cache_registry import invalidate
+    from kbrowse_spark.session import get_spark, tune_for_input
+
+    qs = all_queries()
+    unknown = [op for op in ops if op not in qs]
+    if unknown:
+        print(f"unknown queries: {', '.join(unknown)}", file=sys.stderr)
+        return 2
+    spark = get_spark("scaling_probe")
+    runs = bench_runs()
+    measured: dict[str, tuple[float, float, float]] = {}
+    for op in ops:
+        tune_for_input(spark, small_dir)
+        t_small, spread_small = time_query(spark, qs[op].builder, small_dir, runs)
+        tune_for_input(spark, big_dir)
+        t_big, spread_big = time_query(spark, qs[op].builder, big_dir, runs)
+        measured[op] = (t_small, t_big, max(spread_small, spread_big))
+        print(f"{op}: {small} {t_small:.2f}s  {big} {t_big:.2f}s"
+              f"  ratio {t_big / max(t_small, 1e-9):.1f}x", flush=True)
+    invalidate()
+
+    where = (
+        f"Measured: small dir `{small_dir}`,"
+        f" {spark.sparkContext.defaultParallelism} cores"
+        f" (`defaultParallelism`), min of {runs} runs per point."
+    )
+    with open(DOC) as f:
+        doc = f.read()
+    with open(DOC, "w") as f:
+        f.write(write_section(doc, small, big, where, measured))
+    print(f"wrote {len(measured)} rows to ## {big} step in {DOC}")
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.path.insert(0, REPO)
+    raise SystemExit(main(sys.argv[1:]))
