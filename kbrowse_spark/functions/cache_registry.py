@@ -69,13 +69,14 @@ def compact_to_source(
     spark.sql.shuffle.partitions is stored as near-empty partitions
     (AQE cannot reshape an InMemoryRelation), taxing every consumer
     Catalyst substitutes onto the cache with empty-task stages
-    (measured r7: ngram_novelty_rate 0.47 s -> 0.93 s).  But a
+    (ngram_novelty_rate measured 0.47 s with a compact cache and 0.93 s
+    with one left at the shuffle partition count).  But a
     hardcoded ``coalesce(1)`` is the opposite scale-killer: a
     doc-grain aggregate of a 100 TB corpus is billions of rows, and a
     1-partition cached relation funnels every consumer through one
     executor core's memory.  Tying the target to the source scan's
-    partition count gives 1 partition at fixture size (keeping the r7
-    fix) and O(input/divisor) partitions at cluster scale.  ``divisor``
+    partition count gives 1 partition at fixture size (the compact
+    case above) and O(input/divisor) partitions at cluster scale.  ``divisor``
     reflects the grain drop from source to aggregate (shingle grain ->
     doc/pair grain is >=an order of magnitude).
 

@@ -1129,8 +1129,9 @@ _SEMDEDUP_DEN = 400
 # (SemDeDup is already recall-approximate; this is the same knob as
 # growing k in the cell assignment).  At fixture SFs every cell is
 # under the cap (n_sub = 1, scan unchanged); measured at sf1
-# (tools/scaling_probe_sf1.py) this is what keeps the 10x data step
-# near-linear instead of the 14.5x step of the uncapped scan.
+# (``python tools/scaling_probe.py SF0.1_DIR .localdata/sf1``) this is
+# what keeps the 10x data step near-linear instead of the 14.5x step of
+# the uncapped scan.
 _SEMDEDUP_CELL_CAP = 256
 
 

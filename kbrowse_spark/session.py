@@ -17,13 +17,13 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-# Input-size-aware shuffle sizing (the deployment rule, promoted from
-# the sf10 scaling probe per VERDICT r8 #3): a shuffle partition should
-# hold a ROUGHLY FIXED volume of input regardless of corpus size, so
-# growing the data can never silently turn an in-memory shuffle into a
-# spilling one.  8 MiB of on-disk parquet per partition (~3-5x that in
-# memory after decompression) keeps partitions comfortably inside a
-# local[32] thread's share of the heap; a real cluster deployment would
+# Input-size-aware shuffle sizing (the deployment rule, measured with
+# the sf10 scaling probe): a shuffle partition should hold a ROUGHLY
+# FIXED volume of input regardless of corpus size, so growing the data
+# can never silently turn an in-memory shuffle into a spilling one.
+# 8 MiB of on-disk parquet per partition (~3-5x that in memory after
+# decompression) keeps partitions comfortably inside a local[32]
+# thread's share of the heap; a real cluster deployment would
 # raise the target to ~128 MiB per core-slot and let AQE coalesce the
 # small tail.  Measured effect: dedup_prefix_filter_join's sf1->sf10
 # step went 5.5x -> 2.9x when partitions scaled 32 -> 128+ instead of
@@ -99,6 +99,12 @@ def get_spark(
         # nanosecond timestamp type, so read as long and convert at the
         # source (see sources/tables.py).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # PySpark's call-site capture sends ~5 extra py4j calls with
+        # every Column and DataFrame method (and tries to import IPython
+        # each time) to enrich error messages.  Its on/off switch is
+        # latched once per process by whichever thread builds the first
+        # Column, so without this line it is on or off by accident.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

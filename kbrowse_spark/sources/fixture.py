@@ -6,14 +6,17 @@ every operator downstream of the source is source-agnostic: swap the
 fixture for the real ``format("kafka")`` reader and nothing changes
 (kbrowse's record envelope: `src/kbrowse/search.clj:34-42`).
 
-A fixture path stands in for a broker, so the planner reads its
-metadata from a ``SourceSnapshot``: the resolved envelope DataFrame (a
-plan, never rows) and, on first use, the ``[earliest, latest)`` offsets
-of every (topic, partition), a few ints each.  One snapshot is cached
-per path, for the 64 most recently used paths.  It is reused while the
-Spark application and the path's file listing (name, size and mtime of
-every data file, listed the way Spark lists it) are unchanged, and
-replaced as soon as either changes.
+Every parquet read of the engine, fixture or table, goes through one
+cache of ``SourceSnapshot``s, one per path, for the 64 most recently used
+paths.  A snapshot holds metadata and plans, never rows: the path's
+schema, read once, so later reads of the path run no schema-inference
+job; and, for the search planner, which reads a fixture path as it
+would a broker, the envelope DataFrame, the ``[earliest, latest)``
+offsets of every (topic, partition), a few ints each, and the decoded
+search projection.  Each is computed on first use.  A snapshot is
+reused while the Spark application and the path's file listing (name,
+size and mtime of every data file, listed the way Spark lists it) are
+unchanged, and replaced as soon as either changes.
 """
 
 from __future__ import annotations
@@ -77,22 +80,29 @@ def _to_envelope(df: DataFrame) -> DataFrame:
     )
 
 
-def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Static read of ``path``.  A directory with no files yet reads as
-    an empty envelope, so follow mode can wait on it."""
-    # TIMESTAMP(NANOS) handling, same as tables.load.
+def _infer_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The schema of ``path`` as Spark infers it (one Spark job).  A
+    directory with no files yet has the envelope schema, so follow mode
+    can wait on it."""
+    # TIMESTAMP(NANOS) handling, as in read_parquet.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     try:
-        return spark.read.parquet(path)
+        return spark.read.parquet(path).schema
     except AnalysisException as e:
         if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
             raise
-        return spark.read.schema(ENVELOPE_SCHEMA).parquet(path)
+        return ENVELOPE_SCHEMA
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """A new batch relation over ``path``, read with the schema its
+    snapshot holds: no Spark job once that schema is known."""
+    return source_snapshot(spark, path).read()
 
 
 def envelope_from_parquet(spark: SparkSession, path: str) -> DataFrame:
     """Batch envelope read of a parquet file, directory or glob."""
-    return _to_envelope(_read_parquet(spark, path))
+    return _to_envelope(read_parquet(spark, path))
 
 
 def stage_stream_dir(path: str, tag: str = "") -> str:
@@ -119,12 +129,12 @@ def stage_stream_dir(path: str, tag: str = "") -> str:
 
 def stream_parquet(spark: SparkSession, path: str, tag: str = "") -> DataFrame:
     """readStream over a parquet file, directory or glob, with the schema
-    of its static read (:func:`_read_parquet`, so an empty directory
-    streams as an envelope).  A single file streams from
-    :func:`stage_stream_dir`.  A directory of Spark-written tables needs
-    a glob (dir/*.parquet): the file source does not recurse."""
+    its snapshot holds (so an empty directory streams as an envelope).
+    A single file streams from :func:`stage_stream_dir`.  A directory of
+    Spark-written tables needs a glob (dir/*.parquet): the file source
+    does not recurse."""
     src = path if "*" in path or os.path.isdir(path) else stage_stream_dir(path, tag)
-    return spark.readStream.schema(_read_parquet(spark, src).schema).parquet(src)
+    return spark.readStream.schema(source_snapshot(spark, src).schema).parquet(src)
 
 
 def envelope_stream_from_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -133,23 +143,43 @@ def envelope_stream_from_parquet(spark: SparkSession, path: str) -> DataFrame:
 
 
 class SourceSnapshot:
-    """What the planner needs to know about a fixture path, resolved at
-    most once per file listing: the envelope DataFrame and the offset
-    bounds per (topic, partition).  Both are computed on first use, so a
-    plan that needs neither runs no Spark job for them.  The lock is this
-    snapshot's own: concurrent cold plans of one path share one Spark
-    job, and never wait on another path's."""
+    """What the engine knows about a parquet path, resolved at most once
+    per file listing: its schema and, for the search planner, the
+    envelope DataFrame, the offset bounds per (topic, partition) and
+    the decoded projections.  Each is computed on first use, so a plan
+    that needs none of them runs no Spark job for them.  The lock is
+    this snapshot's own: concurrent cold plans of one path share one
+    Spark job, and never wait on another path's."""
 
     def __init__(
         self,
         spark: SparkSession,
         path: str,
-        resolve: Callable[[SparkSession, str], DataFrame],
+        resolve: Callable[[SparkSession, str], DataFrame] | None = None,
     ):
-        self._spark, self._path, self._resolve = spark, path, resolve
+        self._spark, self._path = spark, path
+        self._resolve = resolve or envelope_from_parquet
         self._lock = threading.RLock()
+        self._schema: T.StructType | None = None
         self._envelope: DataFrame | None = None
         self._bounds: dict[tuple[str, int], tuple[int, int]] | None = None
+        self._projections: OrderedDict[tuple, DataFrame] = OrderedDict()
+
+    @property
+    def schema(self) -> T.StructType:
+        with self._lock:
+            if self._schema is None:
+                self._schema = _infer_schema(self._spark, self._path)
+            return self._schema
+
+    def read(self) -> DataFrame:
+        """A new relation over the path with the cached schema.  Never a
+        shared one: two reads of one table joined in one plan need
+        distinct attributes."""
+        schema = self.schema
+        # TIMESTAMP(NANOS) columns read as long only under this flag.
+        self._spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        return self._spark.read.schema(schema).parquet(self._path)
 
     @property
     def envelope(self) -> DataFrame:
@@ -172,11 +202,27 @@ class SourceSnapshot:
                 self._bounds = {(t, p): (e, l) for t, p, e, l in rows}
             return self._bounds
 
+    def projection(
+        self, key: tuple, build: Callable[[DataFrame], DataFrame]
+    ) -> DataFrame:
+        """``build(envelope)``, kept under ``key`` (the planner's
+        deserializer settings) for the most recent few keys."""
+        with self._lock:
+            df = self._projections.get(key)
+            if df is None:
+                df = self._projections[key] = build(self.envelope)
+            self._projections.move_to_end(key)
+            while len(self._projections) > _MAX_PROJECTIONS:
+                self._projections.popitem(last=False)
+            return df
+
 
 # The least recently used path is dropped past this constant, so a
 # service that sees many path spellings, or outlives a Spark
-# application, holds a bounded set of plans.
+# application, holds a bounded set of plans; likewise the projections
+# of one path, whose key holds request strings (Avro schemas).
 _MAX_SNAPSHOTS = 64
+_MAX_PROJECTIONS = 8
 _SNAPSHOTS: OrderedDict[str, tuple[tuple, SourceSnapshot]] = OrderedDict()
 _SNAPSHOTS_LOCK = threading.Lock()
 
@@ -184,12 +230,14 @@ _SNAPSHOTS_LOCK = threading.Lock()
 def source_snapshot(
     spark: SparkSession,
     path: str,
-    resolve: Callable[[SparkSession, str], DataFrame],
+    resolve: Callable[[SparkSession, str], DataFrame] | None = None,
 ) -> SourceSnapshot:
     """The cached snapshot of ``path``, replaced when the Spark
     application or the path's file listing changes.  ``resolve`` builds
-    the envelope on a miss.  The module lock guards only the dict: Spark
-    jobs run on first use of the snapshot, under its own lock."""
+    the envelope on first use (:func:`envelope_from_parquet` by
+    default); it is the one given when the snapshot was made.  The
+    module lock guards only the dict: Spark jobs run on first use of
+    the snapshot, under its own lock."""
     key = (spark.sparkContext.applicationId, _listing(spark, path))
     with _SNAPSHOTS_LOCK:
         hit = _SNAPSHOTS.get(path)

@@ -1,10 +1,13 @@
 """Relational table catalog over the driver-generated parquet fixtures.
 
-Tables (see /root/repo/TESTDATA.md): region nation customer supplier part
+Tables (see TESTDATA.md): region nation customer supplier part
 orders lineitem events documents embeddings — one parquet file per table
-under a scale-factor directory.  ``load`` returns a plain DataFrame scan
-so Catalyst can push filters/column pruning into the parquet reader; we
-never cache or collect here.
+under a scale-factor directory.  ``load`` returns a new plain DataFrame
+scan on every call, so Catalyst can push filters and column pruning into
+the parquet reader.  What is cached is each table's schema, never rows:
+reads go through the source snapshot cache (sources/fixture.py), so only
+the first read of a table file runs a schema-inference job, and a
+rewritten file is read afresh.
 
 Small dimensions (region, nation, supplier at low SF) are good broadcast
 candidates — the operator layer wraps them with ``F.broadcast`` where a
@@ -18,7 +21,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kbrowse_spark.sources.fixture import stream_parquet, ts_micros
+from kbrowse_spark.sources.fixture import read_parquet, stream_parquet, ts_micros
 
 TABLE_NAMES = (
     "region",
@@ -45,13 +48,11 @@ def table_path(sf_dir: str, name: str) -> str:
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
-    if name == "events":
-        # events.parquet stores ts as TIMESTAMP(NANOS), which Spark's
-        # reader rejects unless told to surface it as long.  Set at
-        # runtime so this works on any caller-provided session (the
-        # driver's session does not carry our builder confs).
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, name))
+    # events.parquet stores ts as TIMESTAMP(NANOS), which Spark's reader
+    # surfaces as long only under spark.sql.legacy.parquet.nanosAsLong;
+    # read_parquet sets it at runtime, so this works on any
+    # caller-provided session (the driver's carries none of our confs).
+    df = read_parquet(spark, table_path(sf_dir, name))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", ts_micros())
     return df
@@ -112,8 +113,7 @@ def load_events_range(
     """
     from datetime import datetime, timezone
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, "events"))
+    df = read_parquet(spark, table_path(sf_dir, "events"))
     raw_nanos = dict(df.dtypes).get("ts") == "bigint"
 
     def _nanos(s: str) -> int:

@@ -332,3 +332,59 @@ def test_bounded_search_plan_failure_closes_array(spark, tmp_path):
     assert c.get(f"/cached?{qs}").status_code == 404
     bad = c.get(f"/search?source-parquet={d}&default-partition=true")
     assert bad.status_code == 400 and "error" in bad.get_json()
+
+
+# --- table reads (sources/tables.py) share the cache ------------------------
+
+def test_warm_table_load_runs_no_spark_job(spark, sf_dir):
+    from kbrowse_spark.sources import tables
+
+    tables.load(spark, sf_dir, "lineitem")
+    df, jobs = _jobs_in(spark, lambda: tables.load(spark, sf_dir, "lineitem"))
+    assert jobs == 0
+    # A new relation on every call, never a shared one.
+    assert df is not tables.load(spark, sf_dir, "lineitem")
+
+
+def test_rewritten_table_file_is_read_afresh(spark, sf_dir, tmp_path):
+    """Same table file name, new content with an extra column: the next
+    load sees the column, since the listing keys the cached schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kbrowse_spark.sources import tables
+
+    d = str(tmp_path / "sf")
+    os.makedirs(d)
+    nation = pq.read_table(tables.table_path(sf_dir, "nation"))
+    pq.write_table(nation, tables.table_path(d, "nation"))
+    assert tables.load(spark, d, "nation").columns == nation.column_names
+    assert tables.load(spark, d, "nation").count() == nation.num_rows
+    grown = nation.append_column("n_extra", pa.array(range(nation.num_rows)))
+    pq.write_table(grown, tables.table_path(d, "nation"))
+    df = tables.load(spark, d, "nation")
+    assert df.columns == nation.column_names + ["n_extra"]
+    assert sorted(r.n_extra for r in df.collect()) == list(range(nation.num_rows))
+
+
+def test_two_loads_of_one_table_join_in_one_plan(spark, sf_dir):
+    """Each load is its own relation, so a self-join of two loads (as
+    q7_nation_volume's two nation sides) gives DuckDB's answer."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from kbrowse_spark.sources import tables
+
+    a = tables.load(spark, sf_dir, "nation").select(
+        F.col("n_nationkey").alias("a"), F.col("n_regionkey").alias("r"))
+    b = tables.load(spark, sf_dir, "nation").select(
+        F.col("n_nationkey").alias("b"), F.col("n_regionkey").alias("r"))
+    got = sorted(tuple(row) for row in
+                 a.join(b, "r").filter("a < b").groupBy("r").count().collect())
+    path = tables.table_path(sf_dir, "nation")
+    want = sorted(duckdb.sql(
+        f"SELECT x.n_regionkey, count(*) FROM '{path}' x JOIN '{path}' y"
+        " ON x.n_regionkey = y.n_regionkey AND x.n_nationkey < y.n_nationkey"
+        " GROUP BY 1"
+    ).fetchall())
+    assert got == want and got
