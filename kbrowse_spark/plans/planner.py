@@ -139,16 +139,16 @@ def _any(conds) -> str:
 
 
 def load_envelope(spark: SparkSession, spec: QuerySpec) -> DataFrame:
-    """Source DataFrame in Kafka-envelope shape, a stream when
-    ``spec.follow``, with partition pruning and the starting offset
-    window already applied at the source."""
+    """The follow-mode or Kafka source in Kafka-envelope shape, a stream
+    when ``spec.follow``, with partition pruning and the starting offset
+    window already applied at the source.  A fixture path is read here
+    only as a stream: :func:`build_scan` plans a batch fixture scan from
+    the snapshot's cached projection."""
     if spec.source_parquet:
         snapshot = _snapshot(spark, spec)
-        if spec.follow:
-            df = envelope_stream_from_parquet(spark, spec.source_parquet)
-        else:
-            df = snapshot.envelope
-        return df.filter(_all(_fixture_condition(snapshot, spec)))
+        return envelope_stream_from_parquet(snapshot).filter(
+            _all(_fixture_condition(snapshot, spec))
+        )
     if spec.bootstrap_servers:
         assignment = _assign(spec, _broker_partition_counts(spec))
         starting = (

@@ -100,9 +100,11 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return source_snapshot(spark, path).read()
 
 
-def envelope_from_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Batch envelope read of a parquet file, directory or glob."""
-    return _to_envelope(read_parquet(spark, path))
+def envelope_from_parquet(snapshot: SourceSnapshot) -> DataFrame:
+    """Batch envelope read of a snapshot's parquet file, directory or
+    glob, through the snapshot's own relation: the path is not listed
+    again, and the envelope is the listing the snapshot is keyed on."""
+    return _to_envelope(snapshot.read())
 
 
 def stage_stream_dir(path: str, tag: str = "") -> str:
@@ -127,26 +129,32 @@ def stage_stream_dir(path: str, tag: str = "") -> str:
     return d
 
 
-def stream_parquet(spark: SparkSession, path: str, tag: str = "") -> DataFrame:
-    """readStream over a parquet file, directory or glob, with the schema
-    its snapshot holds (so an empty directory streams as an envelope).
-    A single file streams from :func:`stage_stream_dir`.  A directory of
-    Spark-written tables needs a glob (dir/*.parquet): the file source
-    does not recurse."""
+def stream_parquet(
+    spark: SparkSession, path: str, tag: str = "", schema: T.StructType | None = None
+) -> DataFrame:
+    """readStream over a parquet file, directory or glob, with ``schema``
+    or else the one its snapshot holds (so an empty directory streams as
+    an envelope).  A single file streams from :func:`stage_stream_dir`.
+    A directory of Spark-written tables needs a glob (dir/*.parquet):
+    the file source does not recurse."""
     src = path if "*" in path or os.path.isdir(path) else stage_stream_dir(path, tag)
-    return spark.readStream.schema(source_snapshot(spark, src).schema).parquet(src)
+    schema = schema or source_snapshot(spark, src).schema
+    return spark.readStream.schema(schema).parquet(src)
 
 
-def envelope_stream_from_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Follow-mode read of ``path`` in envelope shape."""
-    return _to_envelope(stream_parquet(spark, path))
+def envelope_stream_from_parquet(snapshot: SourceSnapshot) -> DataFrame:
+    """Follow-mode read of a snapshot's path in envelope shape, with the
+    snapshot's schema."""
+    return _to_envelope(
+        stream_parquet(snapshot.spark, snapshot.path, schema=snapshot.schema)
+    )
 
 
 class SourceSnapshot:
     """What the engine knows about a parquet path, resolved at most once
     per file listing: its schema and, for the search planner, the
     envelope DataFrame, the offset bounds per (topic, partition) and
-    the decoded projections.  Each is computed on first use, so a plan
+    the decoded projection.  Each is computed on first use, so a plan
     that needs none of them runs no Spark job for them.  The lock is
     this snapshot's own: concurrent cold plans of one path share one
     Spark job, and never wait on another path's."""
@@ -155,21 +163,21 @@ class SourceSnapshot:
         self,
         spark: SparkSession,
         path: str,
-        resolve: Callable[[SparkSession, str], DataFrame] | None = None,
+        resolve: Callable[[SourceSnapshot], DataFrame] | None = None,
     ):
-        self._spark, self._path = spark, path
+        self.spark, self.path = spark, path
         self._resolve = resolve or envelope_from_parquet
         self._lock = threading.RLock()
         self._schema: T.StructType | None = None
         self._envelope: DataFrame | None = None
         self._bounds: dict[tuple[str, int], tuple[int, int]] | None = None
-        self._projections: OrderedDict[tuple, DataFrame] = OrderedDict()
+        self._projection: tuple[tuple, DataFrame] | None = None
 
     @property
     def schema(self) -> T.StructType:
         with self._lock:
             if self._schema is None:
-                self._schema = _infer_schema(self._spark, self._path)
+                self._schema = _infer_schema(self.spark, self.path)
             return self._schema
 
     def read(self) -> DataFrame:
@@ -178,14 +186,14 @@ class SourceSnapshot:
         distinct attributes."""
         schema = self.schema
         # TIMESTAMP(NANOS) columns read as long only under this flag.
-        self._spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return self._spark.read.schema(schema).parquet(self._path)
+        self.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        return self.spark.read.schema(schema).parquet(self.path)
 
     @property
     def envelope(self) -> DataFrame:
         with self._lock:
             if self._envelope is None:
-                self._envelope = self._resolve(self._spark, self._path)
+                self._envelope = self._resolve(self)
             return self._envelope
 
     @property
@@ -206,23 +214,17 @@ class SourceSnapshot:
         self, key: tuple, build: Callable[[DataFrame], DataFrame]
     ) -> DataFrame:
         """``build(envelope)``, kept under ``key`` (the planner's
-        deserializer settings) for the most recent few keys."""
+        deserializer settings) until a plan asks with another key."""
         with self._lock:
-            df = self._projections.get(key)
-            if df is None:
-                df = self._projections[key] = build(self.envelope)
-            self._projections.move_to_end(key)
-            while len(self._projections) > _MAX_PROJECTIONS:
-                self._projections.popitem(last=False)
-            return df
+            if self._projection is None or self._projection[0] != key:
+                self._projection = (key, build(self.envelope))
+            return self._projection[1]
 
 
 # The least recently used path is dropped past this constant, so a
 # service that sees many path spellings, or outlives a Spark
-# application, holds a bounded set of plans; likewise the projections
-# of one path, whose key holds request strings (Avro schemas).
+# application, holds a bounded set of plans.
 _MAX_SNAPSHOTS = 64
-_MAX_PROJECTIONS = 8
 _SNAPSHOTS: OrderedDict[str, tuple[tuple, SourceSnapshot]] = OrderedDict()
 _SNAPSHOTS_LOCK = threading.Lock()
 
@@ -230,7 +232,7 @@ _SNAPSHOTS_LOCK = threading.Lock()
 def source_snapshot(
     spark: SparkSession,
     path: str,
-    resolve: Callable[[SparkSession, str], DataFrame] | None = None,
+    resolve: Callable[[SourceSnapshot], DataFrame] | None = None,
 ) -> SourceSnapshot:
     """The cached snapshot of ``path``, replaced when the Spark
     application or the path's file listing changes.  ``resolve`` builds

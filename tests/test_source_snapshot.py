@@ -86,7 +86,7 @@ def test_miss_resolves_through_planner_global(spark, tmp_path, monkeypatch):
     resolve = planner.envelope_from_parquet
     monkeypatch.setattr(
         planner, "envelope_from_parquet",
-        lambda spark, path: calls.append(path) or resolve(spark, path),
+        lambda snapshot: calls.append(snapshot.path) or resolve(snapshot),
     )
     d = str(tmp_path / "d")
     _land(spark, d, "a.parquet", range(3))
@@ -94,6 +94,25 @@ def test_miss_resolves_through_planner_global(spark, tmp_path, monkeypatch):
     assert _values(spark, spec) == ["v0", "v1", "v2"]
     assert _values(spark, spec) == ["v0", "v1", "v2"]
     assert calls == [d]
+
+
+@pytest.mark.parametrize("follow", [False, True])
+def test_cold_plan_lists_its_path_once(spark, tmp_path, monkeypatch, follow):
+    """The envelope, batch or stream, is read through the snapshot that
+    keyed the plan, so a cold plan lists the path once."""
+    listed = []
+    listing = fixture._listing
+    monkeypatch.setattr(
+        fixture, "_listing",
+        lambda spark, path: listed.append(path) or listing(spark, path),
+    )
+    d = str(tmp_path / "d")
+    _land(spark, d, "a.parquet", range(3))
+    spec = QuerySpec(
+        source_parquet=d, topics=["t"], relative_offset=-1, follow=follow
+    ).validate()
+    build_scan(spark, spec)
+    assert listed == [d]
 
 
 def test_appending_file_moves_relative_offset_window(spark, tmp_path):
@@ -208,10 +227,10 @@ def test_cold_path_does_not_wait_on_another_paths_job(spark, tmp_path):
     _land(spark, b, "b.parquet", range(3))
     entered, release = threading.Event(), threading.Event()
 
-    def slow_resolve(spark, path):
+    def slow_resolve(snapshot):
         entered.set()
         release.wait(timeout=120)
-        return envelope_from_parquet(spark, path)
+        return envelope_from_parquet(snapshot)
 
     slow = source_snapshot(spark, a, slow_resolve)
     blocked = threading.Thread(target=lambda: slow.bounds)
